@@ -60,6 +60,20 @@ object Bench {
     "w10_stream_hourly", "w11_stream_sessions", "w12_stream_enriched",
     "w14_stream_dedup", "w15_stream_join", "w21_stream_transitions")
 
+  /** `s` as a JSON string literal: quoted, with `"`, `\` and control
+    * characters escaped, so a path can't break a JSON parse of the bench
+    * line. */
+  def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b.append('\\').append(f"u${c.toInt}%04x")
+      case c => b += c
+    }
+    b.append('"').toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -100,13 +114,12 @@ object Bench {
     // a22 decade-3 probe left a +55% over-linear excess it could not split
     // between sort-spill and page-cache pressure "without INFO-level logs"
     // — but TaskMetrics carries exactly that split (memoryBytesSpilled /
-    // diskBytesSpilled) without any log parsing. Same pattern as
-    // graft.Profile: rows carry the stage SUBMISSION time (the listener
-    // bus runs seconds behind under load, and wall-window attribution by
-    // arrival time misattributes late events), and attribution happens
-    // once at END of run so stragglers land first. Emitted as
-    // "task_metrics" in the DETAIL files only — per-query bytes for the
-    // rep that set the reported minimum.
+    // diskBytesSpilled) without any log parsing. Rows carry the stage
+    // SUBMISSION time (the listener bus runs seconds behind under load, and
+    // wall-window attribution by arrival time misattributes late events),
+    // and attribution happens once at END of run so stragglers land first.
+    // Emitted as "task_metrics" in the DETAIL files only — per-query bytes
+    // for the rep that set the reported minimum.
     final case class StageAgg(submittedMs: Long, taskMs: Long, gcMs: Long,
       spillMemBytes: Long, spillDiskBytes: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, inputBytes: Long)
@@ -261,9 +274,9 @@ object Bench {
     val results = minima.view
       .mapValues(v => if (v == Double.MaxValue) -1.0 else v).toMap
     // Attribute stage rows to each query's best-rep window. One drain pause
-    // first (Profile's protocol): listener events post asynchronously, and
-    // with submission-time keying a straggler is at worst a missing row,
-    // never a misattributed one.
+    // first: listener events post asynchronously, and with submission-time
+    // keying a straggler is at worst a missing row, never a misattributed
+    // one.
     Thread.sleep(2000)
     val taskMetricsJson: String = {
       val rows = bestWindow.toSeq.sortBy(_._1).map { case (name, (s, e)) =>
@@ -653,13 +666,26 @@ object Bench {
     // $SPARK_GRAFT_CPUS was ignored — print the effective parallelism so
     // the honoring is falsifiable from the outside.
     val master = spark.sparkContext.master
-    val compact =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$headlineTimes,"sf":"$sfDir","reps":$reps,"cpus":$cpus,"master":"$master","errors":$errCount,"floor_regressions":${regressions.size},"floor_regressions_cpu_adj":${adjRegressions.size},"isolated_recheck":$isoJson,"cpu_ref_sec":${sec(cpuRef)},"cpu_ref_mt_sec":${sec(cpuRefMt)},"mem_ref_sec":${sec(memRef)},"mem_ref_mt_sec":${sec(memRefMt)},"stage_ref_sec":${sec(stageRef)},"isolated_stage_ref_sec":${sec(isolatedStageRef)},"isolated_cpu_ref_sec":${sec(isolatedCpuRef)},"cpu_ref_during":$duringJson,"mem_ref_during":$memDuringJson,"isolated_mem_ref_during":$isolatedMemDuring,"quiet_gate":$quietGateJson}"""
-    // task_metrics rides only the detail files: ~190 queries x 8 fields
-    // would reproduce the oversized-line capture failure the compact
-    // headline subset exists to prevent.
-    val detail =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":${fmt(results)},"sf":"$sfDir","reps":$reps,"cpus":$cpus,"master":"$master","errors":$errCount,"floor_regressions":${regressions.size},"floor_regressions_cpu_adj":${adjRegressions.size},"isolated_recheck":$isoJson,"cpu_ref_sec":${sec(cpuRef)},"cpu_ref_mt_sec":${sec(cpuRefMt)},"mem_ref_sec":${sec(memRef)},"mem_ref_mt_sec":${sec(memRefMt)},"stage_ref_sec":${sec(stageRef)},"isolated_stage_ref_sec":${sec(isolatedStageRef)},"isolated_cpu_ref_sec":${sec(isolatedCpuRef)},"cpu_ref_during":$duringJson,"mem_ref_during":$memDuringJson,"isolated_mem_ref_during":$isolatedMemDuring,"quiet_gate":$quietGateJson,"task_metrics":$taskMetricsJson}"""
+    // One field list for both lines: the compact line carries the headline
+    // times, the detail line the full map plus task_metrics (~190 queries
+    // x 8 fields would reproduce the oversized-line capture failure the
+    // compact headline subset exists to prevent).
+    def line(queries: String, extra: (String, String)*): String = (Seq(
+      "metric" -> jsonString("total"), "value" -> sec(total), "unit" -> jsonString("sec"),
+      "queries" -> queries, "sf" -> jsonString(sfDir), "reps" -> reps.toString,
+      "cpus" -> cpus.toString, "master" -> jsonString(master),
+      "errors" -> errCount.toString, "floor_regressions" -> regressions.size.toString,
+      "floor_regressions_cpu_adj" -> adjRegressions.size.toString,
+      "isolated_recheck" -> isoJson, "cpu_ref_sec" -> sec(cpuRef),
+      "cpu_ref_mt_sec" -> sec(cpuRefMt), "mem_ref_sec" -> sec(memRef),
+      "mem_ref_mt_sec" -> sec(memRefMt), "stage_ref_sec" -> sec(stageRef),
+      "isolated_stage_ref_sec" -> sec(isolatedStageRef),
+      "isolated_cpu_ref_sec" -> sec(isolatedCpuRef), "cpu_ref_during" -> duringJson,
+      "mem_ref_during" -> memDuringJson, "isolated_mem_ref_during" -> isolatedMemDuring,
+      "quiet_gate" -> quietGateJson) ++ extra)
+      .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val compact = line(headlineTimes)
+    val detail = line(fmt(results), "task_metrics" -> taskMetricsJson)
     // Only unfiltered runs AT THE CANONICAL SF may rewrite the committed
     // canonical detail — a filtered dev run would silently replace the
     // 193-query record with its subset, and an unfiltered run at another

@@ -14,8 +14,8 @@ import org.apache.spark.sql.streaming.Trigger
   * stream that runs 10× longer at the same event rate holds the SAME state.
   * That claim has so far been argued from the operator contracts
   * (withWatermark + dropDuplicatesWithinWatermark / session_window / range
-  * join condition); this main MEASURES it, the same way GeoScaleEvidence
-  * measures the grid-family claims.
+  * join condition); this main MEASURES it, the way GEOSCALE_r06.json
+  * records the grid-family claims.
   *
   * Method: generate a deterministic event corpus as time-ordered parquet
   * files (fixed hours-per-file, so the per-micro-batch event-time span is a

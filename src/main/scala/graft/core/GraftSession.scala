@@ -17,17 +17,19 @@ import org.apache.spark.sql.SparkSession
   *    derive timestamps explicitly (see Tables.events).
   */
 object GraftSession {
-  /** SPARK_GRAFT_OFFHEAP_GB, validated: a non-negative integer GB count
-    * (0 = disable off-heap — the A/B harness + small-corpus iterative
-    * escape hatch, BASELINE.md round 9). Evaluated lazily so a bad value
-    * fails when a session is actually built, with a message naming the
-    * variable, not as an object-initializer ExceptionInInitializerError. */
-  private lazy val offHeapGb: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_OFFHEAP_GB", "16").trim
-    val parsed = scala.util.Try(raw.toInt).toOption.filter(_ >= 0)
-    parsed.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_OFFHEAP_GB must be a non-negative integer GB count, got '$raw'"))
+  /** A non-negative integer read from env var `name` (default `default`),
+    * validated. Evaluated by lazy vals, so a bad value fails when a session
+    * is actually built, with a message naming the variable, not as an
+    * object-initializer ExceptionInInitializerError. */
+  private def nonNegativeEnv(name: String, default: Int, what: String): Int = {
+    val raw = sys.env.getOrElse(name, default.toString).trim
+    scala.util.Try(raw.toInt).toOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(s"$name must be a non-negative integer $what, got '$raw'"))
   }
+
+  /** SPARK_GRAFT_OFFHEAP_GB (default 16; 0 = disable off-heap — the A/B
+    * harness + small-corpus iterative escape hatch, BASELINE.md round 9). */
+  private lazy val offHeapGb: Int = nonNegativeEnv("SPARK_GRAFT_OFFHEAP_GB", 16, "GB count")
 
   /** SPARK_GRAFT_INITIAL_PARTS (default 0 = off): AQE pre-coalesce shuffle
     * width — "on a real cluster this is overridden (AQE coalesces down from
@@ -42,47 +44,11 @@ object GraftSession {
     * re-reads, +37% wall). Single-box caveat is DISK, not the knob: the
     * two big stages' files coexist at ~the box's free space, so run one
     * big-shuffle query per JVM with tmp corpora pruned. */
-  private lazy val initialParts: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS", "0").trim
-    val parsed = scala.util.Try(raw.toInt).toOption.filter(_ >= 0)
-    parsed.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_INITIAL_PARTS must be a non-negative integer partition count, got '$raw'"))
-  }
-
-  /** SPARK_GRAFT_IO_CODEC (default unset = Spark's lz4): shuffle/spill/
-    * broadcast block codec. The second whale-posture disk lever: the sf100
-    * d11 pair shuffle writes ~45 GiB lz4 on a box with ~76 GiB free, so the
-    * two stages' files coexisting sat at the budget edge and ENOSPC task
-    * retries fired (round 12). zstd trades a little CPU for a markedly
-    * smaller on-disk shuffle — the standard posture for shuffle-heavy
-    * production jobs since Spark 3. Validated against the codecs Spark
-    * ships so a typo fails at session build, not mid-stage. */
-  private lazy val ioCodec: Option[String] = {
-    val known = Set("lz4", "zstd", "snappy", "lzf")
-    sys.env.get("SPARK_GRAFT_IO_CODEC").map(_.trim).filter(_.nonEmpty).map { c =>
-      require(known.contains(c),
-        s"SPARK_GRAFT_IO_CODEC must be one of ${known.toSeq.sorted.mkString(", ")}, got '$c'")
-      c
-    }
-  }
-
-  /** SPARK_GRAFT_BYPASS_THRESHOLD (default 0): the shuffle writer selection
-    * threshold (spark.shuffle.sort.bypassMergeThreshold). 0 = serialized
-    * (Unsafe) writer everywhere — the round-14 measured default on this
-    * host (one spill file + index per map task vs one FILE per reducer).
-    * Parameterised (round-15, VERDICT r14 item 6) so the sort-tax on
-    * big-sort queries (a22/a16/m25 pay +0.2-0.4 s at sf0.1) can be A/B'd at
-    * any scale without a code swap; the measured scaling of the tax is
-    * recorded in OPTIMIZATION_r15.md / BASELINE.md. */
-  private lazy val bypassThreshold: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0").trim
-    val parsed = scala.util.Try(raw.toInt).toOption.filter(_ >= 0)
-    parsed.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_BYPASS_THRESHOLD must be a non-negative integer, got '$raw'"))
-  }
+  private lazy val initialParts: Int =
+    nonNegativeEnv("SPARK_GRAFT_INITIAL_PARTS", 0, "partition count")
 
   def builder(cores: Int): SparkSession.Builder = {
-    val base0 = SparkSession.builder()
+    val base = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -156,9 +122,9 @@ object GraftSession {
       // shuffles take the serialized (Unsafe) writer: ONE spill file +
       // index per map task regardless of reducer count. Large shuffles
       // already used it. Per-partition-count-independent, results
-      // untouched (routing only).
-      .config("spark.shuffle.sort.bypassMergeThreshold", bypassThreshold.toString)
-    val base = ioCodec.fold(base0)(c => base0.config("spark.io.compression.codec", c))
+      // untouched (routing only). The round-15 A/B (OPTIMIZATION_r15.md,
+      // BASELINE.md) re-measured the sort tax at sf1 and kept 0.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
     if (initialParts > 0)
       base.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         initialParts.toString)

@@ -52,7 +52,7 @@ final class DoubleBuf(var arr: Array[Double], var n: Int) {
   }
 
   def toBytes: Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(n * 8)
+    val bb = java.nio.ByteBuffer.allocate(DoubleBuf.serializedSize(n))
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.asDoubleBuffer().put(arr, 0, n)
     bb.array()
@@ -60,6 +60,16 @@ final class DoubleBuf(var arr: Array[Double], var n: Int) {
 }
 
 object DoubleBuf {
+  /** Byte size of the packed image of `n` doubles. A byte array is capped
+    * at 2 GiB, so a group past Int.MaxValue / 8 values (~268M) cannot be
+    * serialized for the exchange; fail by name rather than overflow into
+    * a negative allocation size. */
+  def serializedSize(n: Int): Int = {
+    require(n <= Int.MaxValue / 8,
+      s"sorted_sum group of $n values exceeds the 2 GiB serialized-buffer limit")
+    n * 8
+  }
+
   def fromBytes(bytes: Array[Byte]): DoubleBuf = {
     val n = bytes.length / 8
     val arr = new Array[Double](math.max(n, 16))

@@ -1,7 +1,7 @@
 package graft.ops
 
 /** Machine-speed witness shared by every wall-clock-bearing harness
-  * (Bench, GeoScaleEvidence, StreamScaleEvidence).
+  * (Bench, IsolatedProbe, StreamScaleEvidence).
   *
   * VM-host noise windows cut effective CPU speed ~1.5x for hours at a
   * time (BASELINE.md "Machine-speed witness": 21 unrelated queries flagged
@@ -100,9 +100,7 @@ object CpuWitness {
     s
   }
 
-  /** Single-thread streaming-read bandwidth sample (sec for 2 GB). */
-  def memBandwidth(): Double = memBandwidth(memArray())
-
+  /** Single-thread streaming-read bandwidth sample (sec for 2 GB), min of 3. */
   private def memBandwidth(a: Array[Long]): Double =
     (1 to 3).map { _ =>
       val t0 = System.nanoTime()
@@ -110,25 +108,21 @@ object CpuWitness {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-  /** All-core aggregate-bandwidth sample: `threads` readers stream the
+  /** One all-core aggregate-bandwidth sample: `threads` readers stream the
     * same 256 MB array concurrently from STAGGERED offsets (read-only
     * sharing, no extra footprint, distinct stream positions), sec for
     * threads x 2 GB. Co-tenant memory contention shows here first: the
     * bus saturates before per-core ALUs do. */
-  def memBandwidthMt(threads: Int): Double = memBandwidthMt(threads, memArray())
-
-  private def memBandwidthMt(threads: Int, a: Array[Long]): Double = {
+  private def memSampleMt(threads: Int, a: Array[Long]): Double = {
     val n = math.max(1, threads)
-    (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      val ts = (0 until n).map { i =>
-        val start = ((i.toLong * MemWords) / n).toInt
-        new Thread(() => { require(memSum(a, start) != 42L); () })
-      }
-      ts.foreach(_.start())
-      ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    val t0 = System.nanoTime()
+    val ts = (0 until n).map { i =>
+      val start = ((i.toLong * MemWords) / n).toInt
+      new Thread(() => { require(memSum(a, start) != 42L); () })
+    }
+    ts.foreach(_.start())
+    ts.foreach(_.join())
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** Lazily-allocated probe array for the RUN-SPANNING memory samples —
@@ -148,18 +142,7 @@ object CpuWitness {
     * run separates steady-contended (all shifted) from bursty (max >> min)
     * from quiet. Unit = the mem_ref_mt scale (sec for threads x 2 GB of
     * staggered streaming reads), directly comparable to QuietMemRefMt. */
-  def quickMemSpinMt(threads: Int): Double = {
-    val a = duringArray
-    val n = math.max(1, threads)
-    val t0 = System.nanoTime()
-    val ts = (0 until n).map { i =>
-      val start = ((i.toLong * MemWords) / n).toInt
-      new Thread(() => { require(memSum(a, start) != 42L); () })
-    }
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
+  def quickMemSpinMt(threads: Int): Double = memSampleMt(threads, duringArray)
 
   /** Both bandwidth probes over the SAME pinned 256 MB array the
     * run-spanning during-probe uses (st, mt) — this is the form Bench uses
@@ -172,21 +155,22 @@ object CpuWitness {
     * makes the startup and during probes measure the same pages. */
   def memWitness(threads: Int): (Double, Double) = {
     val a = duringArray
-    (memBandwidth(a), memBandwidthMt(threads, a))
+    (memBandwidth(a), (1 to 3).map(_ => memSampleMt(threads, a)).min)
   }
 
   // ---- per-stage scheduler-latency witness ----
   //
   // The third host-state component neither spin sees: DRIVER-side stage
-  // round-trip latency. Fixpoint-loop queries on fixture-sized inputs
-  // (SSSP, isochrone, k-core — ~46 stages of ~25 ms total executor work,
-  // per graft.Profile) have wall-clock = stages x per-stage latency, and
-  // that latency varied 29->52 ms/stage across 2026-08-14 sessions while
-  // cpu_ref AND mem_ref read quiet — the graph-family floor flags in the
-  // 195.6 s canonical run were exactly this. The probe: a chained-shuffle
-  // no-op job over a 64-row RDD — RDD API, not DataFrame, so Catalyst's
-  // CollapseRepartition can't fold the exchanges away — whose executor
-  // work is ~zero, leaving K stage round-trips of pure scheduler cost.
+  // round-trip latency. Fixpoint-loop queries on fixture-sized inputs (SSSP,
+  // isochrone, k-core — ~46 stages of ~25 ms total executor work,
+  // BASELINE.md round 7 stage-latency section) have wall-clock = stages x
+  // per-stage latency, and that latency varied 29->52 ms/stage across
+  // 2026-08-14 sessions while cpu_ref AND mem_ref read quiet — the graph-
+  // family floor flags in the 195.6 s canonical run were exactly this. The
+  // probe: a chained-shuffle no-op job over a 64-row RDD — RDD API, not
+  // DataFrame, so Catalyst's CollapseRepartition can't fold the exchanges
+  // away — whose executor work is ~zero, leaving K stage round-trips of pure
+  // scheduler cost.
 
   private val StageChain = 24
 

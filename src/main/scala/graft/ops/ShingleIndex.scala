@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * shingle-index dedup.
   *
   * Build shape — broadcast stop-shingle anti-join (ported round 14 from the
-  * ScaleStream harness where it was validated bit-identical at 500k docs and
-  * turned a fatal ENOSPC into a 36 GiB-peak clean run at 50M docs,
-  * tmp/scale/r13_stream_50m_lsh*.log): filtering the exploded (doc, sh)
+  * decade-four scale harness, where it was validated bit-identical at 500k
+  * docs and turned a fatal ENOSPC into a 36 GiB-peak clean run at 50M docs;
+  * BASELINE.md round 13 "decade FOUR" and round 14 sections): filtering the exploded (doc, sh)
   * relation by joining it against the KEEP set re-keys the full
   * data-proportional relation by `sh` and the downstream signature/pair
   * aggregates re-key it again by `doc_id` — two data-proportional shuffles

@@ -103,40 +103,31 @@ object EventsAnomaly {
     * per-task cost itself GROWS with the partition count (6.4 s → 0.9 s),
     * so inheriting local[32]'s default was pure overhead at this state
     * size. The rule sizes partitions at one per ~32 MB of source bytes
-    * (clamped to [4, 1024]) — sf0.1's ~4 MB stream runs at 4, a
-    * terabyte-scale stream derives hundreds, and SPARK_GRAFT_STREAM_PARTS
-    * overrides for operators that know their state volume. Results are
+    * (clamped to [4, 1024]) — sf0.1's ~4 MB stream runs at 4 and a
+    * terabyte-scale stream derives hundreds. Results are
     * partition-count-independent (hash routing only), which the 6
-    * streaming oracles re-verify. */
-  private def streamShuffleParts(spark: SparkSession, parquetPath: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.trim.toInt) match {
-      case Some(n) =>
-        require(n > 0, s"SPARK_GRAFT_STREAM_PARTS must be positive, got $n")
-        n
-      case None =>
-        // Hadoop FS sizing (round-15, ADVICE r14): java.io.File reads ~0
-        // bytes for any non-local URI (hdfs://, s3a://) or nested/
-        // partitioned layout (listFiles is non-recursive) and would
-        // silently clamp a terabyte stream to 4 state partitions on
-        // cluster storage. getContentSummary walks the tree through
-        // whatever filesystem the path names; on failure fall back to the
-        // 4-partition floor LOUDLY rather than silently.
-        val bytes =
-          try {
-            val path = new org.apache.hadoop.fs.Path(parquetPath)
-            val conf = spark.sparkContext.hadoopConfiguration
-            path.getFileSystem(conf).getContentSummary(path).getLength
-          } catch {
-            case e: Exception =>
-              System.err.println(
-                s"[streaming] source sizing failed for $parquetPath (${e.getMessage}) — " +
-                  "defaulting to the 4-partition state floor; set SPARK_GRAFT_STREAM_PARTS to override")
-              0L
-          }
-        val parts = math.min(1024L, math.max(4L, bytes / (32L << 20))).toInt
-        System.err.println(s"[streaming] $parquetPath: $bytes source bytes -> $parts state partitions")
-        parts
-    }
+    * streaming oracles re-verify.
+    *
+    * Sizing goes through Hadoop FS (round-15, ADVICE r14): java.io.File
+    * reads ~0 bytes for any non-local URI (hdfs://, s3a://) or nested/
+    * partitioned layout (listFiles is non-recursive) and would silently
+    * clamp a terabyte stream to 4 state partitions on cluster storage.
+    * getContentSummary walks the tree through whatever filesystem the path
+    * names. A sizing failure propagates, naming the path: a transient
+    * filesystem error must not silently size a remote stream at the floor. */
+  private def streamShuffleParts(spark: SparkSession, parquetPath: String): Int = {
+    val path = new org.apache.hadoop.fs.Path(parquetPath)
+    val bytes =
+      try path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(path).getLength
+      catch {
+        case e: java.io.IOException =>
+          throw new java.io.IOException(s"stream source sizing failed for $parquetPath", e)
+      }
+    val parts = math.min(1024L, math.max(4L, bytes / (32L << 20))).toInt
+    System.err.println(s"[streaming] $parquetPath: $bytes source bytes -> $parts state partitions")
+    parts
+  }
 
   /** Run `body` (a streaming start/await bracket) with the session's
     * shuffle-partition conf pinned to [[streamShuffleParts]], restoring the
@@ -157,9 +148,10 @@ object EventsAnomaly {
     * the checkpoint is discarded the moment the query terminates — so its
     * checkpoint needs none of the durability a production job's does, yet
     * the default temp location puts it on real disk, where every state
-    * store delta + offset/commit log fsyncs. Measured (StreamProbe, sf0.1,
-    * 32 state partitions): disk-synced checkpoints cost ~9 ms per state
-    * partition per batch of pure sync latency — ~0.3 s of the w10 replay —
+    * store delta + offset/commit log fsyncs. Measured (BASELINE.md
+    * "w10_stream_hourly: profiled anatomy", round 8, sf0.1, 32 state
+    * partitions): disk-synced checkpoints cost ~9 ms per state partition
+    * per batch of pure sync latency — ~0.3 s of the w10 replay —
     * and that latency moves with host windows, which is exactly the noise
     * a correctness/bench harness should not carry. Production jobs keep
     * durable checkpoints; match durability to what the artifact needs. */
@@ -208,29 +200,14 @@ object EventsAnomaly {
   }
 
   /** Start `dsw` with an ephemeral checkpoint (when available), await the
-    * bounded run, and clean the checkpoint up — shared tail of the three
-    * replay variants. `checkpointDir` overrides the default ephemeral
-    * (shm-backed) location; StreamProbe uses it to bisect checkpoint IO
-    * (disk vs shm) — without the override every probe arm would silently
-    * measure the shm default.
-    *
-    * Checkpoint ownership (ADVICE r9): only the INTERNALLY-created
-    * ephemeral checkpoint is deleted here. A caller-supplied
-    * `checkpointDir` is the caller's to clean (StreamProbe removes its
-    * throwaway disk arm itself) — deleting it here would destroy a
-    * durable checkpoint location a future caller passes in. Note a
-    * bounded AvailableNow replay over a REUSED checkpoint resumes past
-    * already-processed data, so callers passing a dir must clear it
-    * between runs if they want a full replay. */
-  private def runBounded(spark: SparkSession,
-      dsw: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-      name: String, checkpointDir: Option[String]): DataFrame = {
-    val internal = checkpointDir.isEmpty
-    val ckpt = checkpointDir.orElse(ephemeralCheckpoint())
+    * bounded run, and clean the checkpoint up — shared tail of the
+    * complete-mode replays. */
+  private def runBounded(
+      dsw: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
+    val ckpt = ephemeralCheckpoint()
     val q = ckpt.fold(dsw)(dsw.option("checkpointLocation", _)).start()
     try q.awaitTermination()
-    finally if (internal) ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
-    spark.table(name)
+    finally ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
   }
 
   private def boundedSource(spark: SparkSession, parquetPath: String): DataFrame = {
@@ -257,14 +234,14 @@ object EventsAnomaly {
     * [[replayBoundedLarge]]; data-proportional append emissions use the
     * file-sink variants below. */
   def replayBounded(spark: SparkSession, parquetPath: String,
-      transform: DataFrame => DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
+      transform: DataFrame => DataFrame): DataFrame = {
     val name = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withStreamParts(spark, parquetPath) {
-      runBounded(spark, transform(boundedSource(spark, parquetPath)).writeStream
+      runBounded(transform(boundedSource(spark, parquetPath)).writeStream
         .format("memory").queryName(name)
         .outputMode("complete")
-        .trigger(Trigger.AvailableNow()), name, checkpointDir)
+        .trigger(Trigger.AvailableNow()))
+      spark.table(name)
     }
   }
 
@@ -281,16 +258,12 @@ object EventsAnomaly {
     val out = sinkDir(spark)
     val write: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => batch.write.mode("overwrite").parquet(out)
-    val ckpt = ephemeralCheckpoint()
     val transformed = transform(boundedSource(spark, parquetPath))
-    val dsw = transformed.writeStream
-      .outputMode("complete")
-      .foreachBatch(write)
-      .trigger(Trigger.AvailableNow())
     withStreamParts(spark, parquetPath) {
-      val q = ckpt.fold(dsw)(dsw.option("checkpointLocation", _)).start()
-      try q.awaitTermination()
-      finally ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
+      runBounded(transformed.writeStream
+        .outputMode("complete")
+        .foreachBatch(write)
+        .trigger(Trigger.AvailableNow()))
     }
     readSinkOrEmpty(spark, out, transformed.schema)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{SortedSumD, VectorExpr}
+import graft.functions.{DoubleBuf, SortedSumD, VectorExpr}
 
 /** Pins the round-15 primitive-buffer sorted-sum aggregate bit-identical to
   * the expression chain it replaced — `vec_seq_sum(sort_array(collect_list))`
@@ -71,5 +71,11 @@ class SortedSumAggSpec extends SparkSpec {
       .select("s").as[Double].head()
     val expect = vals.sorted.foldLeft(0.0)(_ + _)
     assert(bits(got) == bits(expect))
+  }
+
+  test("a group past the 2 GiB serialized-buffer limit fails by name, not by overflow") {
+    assert(DoubleBuf.serializedSize(Int.MaxValue / 8) == Int.MaxValue / 8 * 8)
+    val e = intercept[IllegalArgumentException](DoubleBuf.serializedSize(Int.MaxValue / 8 + 1))
+    assert(e.getMessage.contains("2 GiB serialized-buffer limit"))
   }
 }

@@ -93,4 +93,14 @@ class StreamingSpec extends SparkSpec {
       rm(dir)
     }
   }
+
+  test("a replay source that cannot be sized fails naming its path") {
+    // Sizing errors propagate: a transient filesystem error must not
+    // silently size a remote stream at the 4-partition state floor.
+    val missing = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-missing-${java.util.UUID.randomUUID()}/events.parquet").getPath
+    val e = intercept[java.io.IOException](
+      EventsAnomaly.replayBounded(spark, missing, s => EventsAnomaly.hourlyCounts(s)))
+    assert(e.getMessage.contains(missing))
+  }
 }

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main with plain `java`, replicating build.sbt's forked-run
 # JVM options (add-opens, SPARK_DRIVER_MEM heap, UTC, no UI) — lets a dev
-# session run Bench/Verify/Profile without sbt lock contention or startup
+# session run Bench/Verify/PlanDump without sbt lock contention or startup
 # cost. Classpath is captured once into tmp/classpath.txt (refresh with
 # `sbt "export Runtime/fullClasspath"` after dependency changes; class
 # RECOMPILES need only `sbt compile`, the path stays valid).

@@ -44,88 +44,6 @@ def witness(path):
     return {k: d[k] for k in WITNESS_FIELDS if k in d} or None
 
 
-def w15_replay_section(path="tmp/scale/w15_replay.jsonl"):
-    """Fold the W15ReplayEvidence ladder (time-ordered multi-batch replay,
-    watermark-bounded join state) into the report — the measurement that
-    replaces the round-8 density-squared ARGUMENT for w15_stream_join.
-    Re-runs append; per scale the MINIMUM-wall record wins (the whale
-    warm-minima protocol: each line carries its own stage_ref/cpu_ref
-    witness, and the micro-batch constant is stage-latency-bound, so a
-    2x-slow scheduler window doubles every batch — the quiet-window
-    reading is the honest one). n_runs records how many were folded."""
-    if not os.path.exists(path):
-        return None
-    # Decade ratios are only meaningful between runs of the SAME replay
-    # config: a sf1 run at chunk_days=5 has a different per-batch volume
-    # than a sf10 run at chunk_days=2, so folding minima across configs
-    # would silently misstate the ladder (ADVICE r9). Group by
-    # (scale, chunk_days), pick the canonical chunk_days = the config
-    # covering the most ladder scales (tie: most records), and build the
-    # ladder only from it; other configs are reported as excluded.
-    by_cfg = {}
-    with open(path) as f:
-        for line in f:
-            line = line.strip()
-            if line:
-                r = json.loads(line)
-                key = (r["scale"], r.get("chunk_days"))
-                by_cfg.setdefault(key, []).append(r)
-    if not by_cfg:
-        return None
-    cfg_scales = {}
-    for (s, cd), recs in by_cfg.items():
-        cfg_scales.setdefault(cd, {"scales": set(), "n": 0})
-        cfg_scales[cd]["scales"].add(s)
-        cfg_scales[cd]["n"] += len(recs)
-    # Legacy records lacking chunk_days pool under None — an UNTAGGED mix
-    # of configs, not a config. They must never be elected canonical (they
-    # can span the most scales precisely because they're mixed, ADVICE
-    # r10); they stay listed in excluded_chunk_days. Only if NO tagged
-    # config exists does the untagged pool report (better than nothing,
-    # and the ladder caveat is then visible in chunk_days: null).
-    tagged = {cd: v for cd, v in cfg_scales.items() if cd is not None}
-    pool = tagged if tagged else cfg_scales
-    canon_cd = max(pool,
-                   key=lambda cd: (len(pool[cd]["scales"]),
-                                   pool[cd]["n"]))
-    excluded = sorted(str(cd) for cd in cfg_scales if cd != canon_cd)
-    rows, counts = {}, {}
-    for (s, cd), recs in by_cfg.items():
-        if cd != canon_cd:
-            continue
-        counts[s] = len(recs)
-        rows[s] = min(recs, key=lambda r: r.get("sec", 1e18))
-    for s, r in rows.items():
-        r["n_runs"] = counts[s]
-    ladder = [s for s in ["sf0.1", "sf1", "sf10"] if s in rows]
-    for prev, cur in zip(ladder, ladder[1:]):
-        a, b = rows[prev], rows[cur]
-        if a.get("sec"):
-            b["decade_sec_ratio"] = round(b["sec"] / a["sec"], 2)
-        if a.get("pairs"):
-            b["decade_pairs_ratio"] = round(b["pairs"] / a["pairs"], 2)
-        if a.get("max_state_rows"):
-            b["decade_max_state_ratio"] = round(
-                b["max_state_rows"] / a["max_state_rows"], 2)
-    return {
-        "chunk_days": canon_cd,
-        "excluded_chunk_days": excluded or None,
-        "harness": "graft.W15ReplayEvidence: events staged into time-ordered "
-                   "parquet files of fixed event-time span (chunk_days), "
-                   "replayed with maxFilesPerTrigger=1 so the watermark "
-                   "advances between micro-batches and join state is "
-                   "evicted; state rows from StreamingQueryProgress",
-        "reading": "wall-clock ~ batches x constant (linear in data), "
-                   "max_state_rows ~ flat per decade (state counts the "
-                   "watermark horizon, not the corpus) — the single-batch "
-                   "replay's >10x warm ratio is a harness artifact: with no "
-                   "mid-run watermark advance, per-user click state is "
-                   "never evicted and every purchase scans the user's full "
-                   "history",
-        "scales": [rows[s] for s in ladder],
-    }
-
-
 def main():
     sf01 = load("bench_detail.json")
     cold10 = load("tmp/scale/whale10_cold_detail.json")
@@ -215,7 +133,6 @@ def main():
             "sf10_warm": witness("tmp/scale/whale10_warm_detail.json"),
             "sf1_warm": witness("tmp/scale/whale1_warm_detail.json"),
         }.items() if v},
-        "w15_span_replay": w15_replay_section(),
         "two_decade_table": rows,
     }
     path = f"WHALESCALE_r{ROUND:02d}.json"
