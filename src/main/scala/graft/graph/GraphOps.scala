@@ -1,8 +1,11 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Graph algorithms as iterative DataFrame programs (SURVEY.md §2.9
   * M14/M15/M17; reference uses networkx in-process —
@@ -13,6 +16,12 @@ import org.apache.spark.storage.StorageLevel
   * so the graph can be arbitrarily large; only the frontier/dist state is
   * iterated. Each round persists and materializes the new state then drops
   * the old one, keeping lineage flat (no exponential plan growth).
+  *
+  * One exception: [[sssp]] (and so [[reachable]]) runs all of its rounds
+  * inside one task when its edges are integral and their estimated size is
+  * at most `spark.sql.autoBroadcastJoinThreshold`, the size Spark already
+  * trusts one task to hold whole. Larger graphs, or a threshold of -1, take
+  * the relational loop; both paths return identical rows and schema.
   */
 object GraphOps {
 
@@ -26,34 +35,68 @@ object GraphOps {
     * fixpoint exit: returns `(id, dist)` = min cost over paths from `source`
     * using ≤ iters edges.
     *
-    * CRITICAL iterative-DataFrame detail: each round references the previous
-    * state twice (relaxation + union), so composing rounds lazily doubles the
-    * logical plan per round — 2^iters leaves and exponential Catalyst
-    * analysis time. Every round truncates lineage via core.Materialize.cut —
-    * reliable `checkpoint` when the context has a checkpoint dir (cluster
-    * mode, survives executor loss), `localCheckpoint` otherwise. The fixpoint
-    * test rides the same materialization: distances only decrease under
-    * min-relaxation, so an unchanged (count, Σdist) signature means no edge
-    * relaxed. */
+    * Two paths, chosen from the input alone; both give the same rows and
+    * the same schema, nullability included:
+    *  - '''In-task''', when `src`, `dst` and `w` are integral and the edge
+    *    plan's estimated size is at most `spark.sql.autoBroadcastJoinThreshold`
+    *    (the size Spark already trusts one task to hold whole): one lazy
+    *    `coalesce(1).mapPartitions` that runs every round over an in-memory
+    *    adjacency. Building it starts no job; evaluating it is one task.
+    *  - '''Relational''' otherwise (and always when the threshold is -1):
+    *    one join + hash aggregate per round, so the graph can be arbitrarily
+    *    large.
+    *
+    * Both run synchronous rounds (each reads only the previous round's
+    * state, so the ≤ iters edges bound holds), exit when the `(count, Σdist)`
+    * signature is unchanged (distances only decrease under min-relaxation,
+    * so an unchanged signature means no edge relaxed), and fail on overflow
+    * rather than wrap.
+    *
+    * CRITICAL iterative-DataFrame detail for the relational loop: each round
+    * references the previous state twice (relaxation + union), so composing
+    * rounds lazily doubles the logical plan per round — 2^iters leaves and
+    * exponential Catalyst analysis time. Every round truncates lineage via
+    * core.Materialize.cutLazy — reliable `checkpoint` when the context has a
+    * checkpoint dir (cluster mode, survives executor loss), `localCheckpoint`
+    * otherwise — and the fixpoint test rides the same materialization. */
   def sssp(edges: DataFrame, source: Long, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
     // Disjoint column names vs the dist state, so the repeated self-referencing
     // join stays unambiguous across iterations.
     val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"), col("w").as("e_w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = graft.core.Materialize.cut(
-      spark.range(1).select(lit(source).as("id"), lit(0L).as("dist")))
+    val start = edges.sparkSession.range(1).select(lit(source).as("id"), lit(0L).as("dist"))
+    if (fitsOneTask(e)) {
+      val schema = (if (iters >= 1) relaxRound(start, e) else start).schema
+      e.select(col("e_src").cast("long"), col("e_dst").cast("long"), col("e_w").cast("long"))
+        .coalesce(1)
+        .mapPartitions(rows => ssspRounds(rows, source, iters))(Encoders.row(schema))
+    } else ssspRelational(e, start, iters)
+  }
+
+  private val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
+  private def fitsOneTask(e: DataFrame): Boolean =
+    e.schema.forall(f => integral(f.dataType)) &&
+      e.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        e.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** One synchronous round: every state row extends along its out-edges and
+    * each id keeps its minimum candidate. */
+  private def relaxRound(dist: DataFrame, e: DataFrame): DataFrame =
+    dist.unionByName(dist.join(e, col("id") === col("e_src"))
+        .select(col("e_dst").as("id"), (col("dist") + col("e_w")).as("dist")))
+      .groupBy("id").agg(min("dist").as("dist"))
+
+  private def ssspRelational(edges: DataFrame, start: DataFrame, iters: Int): DataFrame = {
+    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    var dist = graft.core.Materialize.cut(start)
     var sig = (1L, 0L)
     var converged = false
     for (_ <- 1 to iters if !converged) {
-      val relaxed = dist.join(e, col("id") === col("e_src"))
-        .select(col("e_dst").as("id"), (col("dist") + col("e_w")).as("dist"))
       // cutLazy + signature aggregate = ONE job per round (the aggregate
       // scans every partition, materializing the checkpoint blocks as it
       // goes) — the eager cut spent a whole extra job on materialization
       // alone (guide §1.2: remove unnecessary passes).
-      val next = graft.core.Materialize.cutLazy(dist.unionByName(relaxed)
-        .groupBy("id").agg(min("dist").as("dist")))
+      val next = graft.core.Materialize.cutLazy(relaxRound(dist, e))
       val row = next.agg(count(lit(1)).as("c"), sum("dist").as("s")).head()
       val nextSig = (row.getLong(0), row.getLong(1))
       converged = nextSig == sig
@@ -68,6 +111,37 @@ object GraphOps {
     }
     e.unpersist()
     dist
+  }
+
+  /** The relational loop's rounds over `(src, dst, w)` long rows held in one
+    * task, emitted sorted by id (nulls first). Null semantics follow the
+    * join + min plan: a null src never matches a state id, a null dst is
+    * the null id, and a null dist or w makes a null candidate that min
+    * ignores unless it is the id's only one. */
+  private def ssspRounds(rows: Iterator[Row], source: Long, iters: Int): Iterator[Row] = {
+    def opt(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val out = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Option[Long], Option[Long])]]
+    rows.foreach { r =>
+      if (!r.isNullAt(0))
+        out.getOrElseUpdate(r.getLong(0), mutable.ArrayBuffer.empty) += ((opt(r, 1), opt(r, 2)))
+    }
+    var dist = mutable.HashMap[Option[Long], Option[Long]](Some(source) -> Some(0L))
+    var sig = (1L, 0L)
+    var converged = false
+    for (_ <- 1 to iters if !converged) {
+      val next = dist.clone()
+      for ((Some(u), du) <- dist; (v, w) <- out.getOrElse(u, Nil)) {
+        val cand = for (d <- du; x <- w) yield Math.addExact(d, x)
+        next(v) = next.get(v).fold(cand)(cur => (cur ++ cand).minOption)
+      }
+      val nextSig = (next.size.toLong, next.valuesIterator.flatten.foldLeft(0L)(Math.addExact))
+      converged = nextSig == sig
+      dist = next
+      sig = nextSig
+    }
+    dist.toSeq.sortBy(_._1).iterator.map { case (id, d) =>
+      Row(id.map(Long.box).orNull, d.map(Long.box).orNull)
+    }
   }
 
   /** Isochrone support (M15): nodes reachable from `source` with path cost
@@ -182,9 +256,13 @@ object GraphOps {
     // fuse into ONE job per round (2 → 1). Dataset.observe cannot do this:
     // the CollectMetrics node would sit behind the localCheckpoint
     // boundary, whose materialization is not a tracked QueryExecution, so
-    // the observation never fires. Emptiness-by-accumulator is exact under
+    // the observation never fires. Emptiness-by-accumulator is safe under
     // recompute/retry inflation: a bump can only come from a task that saw
-    // a row, and a truly empty contraction never produces one.
+    // a row, and a truly empty contraction never produces one. Inflation
+    // only errs one way: an evicted earlier contraction recomputed after
+    // the snapshot adds bumps, which can DELAY edgesDone (extra contraction
+    // rounds, a performance cost) but never set it early, so it never
+    // changes a result.
     val contractedRows = spark.sparkContext.longAccumulator("cc_contracted_rows")
     def bump(c: org.apache.spark.sql.Column) =
       graft.functions.RowTouch.touch(c, contractedRows)

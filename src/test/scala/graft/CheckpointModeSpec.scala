@@ -34,19 +34,22 @@ class CheckpointModeSpec extends SparkSpec {
   }
 
   test("sssp under reliable checkpointing matches local mode") {
-    val edges = Seq((0L, 1L, 5L), (1L, 2L, 3L), (0L, 2L, 10L), (2L, 3L, 1L))
-      .toDF("src", "dst", "w")
-    val local = GraphOps.sssp(edges, 0L, 5)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val reliable = GraphOps.sssp(edges, 0L, 5)
+    // threshold -1 keeps sssp on the checkpointed relational loop
+    withSqlConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val edges = Seq((0L, 1L, 5L), (1L, 2L, 3L), (0L, 2L, 10L), (2L, 3L, 1L))
+        .toDF("src", "dst", "w")
+      val local = GraphOps.sssp(edges, 0L, 5)
         .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(reliable === local)
-      assert(reliable === Seq(0L -> 0L, 1L -> 5L, 2L -> 8L, 3L -> 9L))
-    } finally {
-      spark.sparkContext.setCheckpointDir(null)
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        val reliable = GraphOps.sssp(edges, 0L, 5)
+          .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(reliable === local)
+        assert(reliable === Seq(0L -> 0L, 1L -> 5L, 2L -> 8L, 3L -> 9L))
+      } finally {
+        spark.sparkContext.setCheckpointDir(null)
+      }
     }
   }
 }

@@ -23,6 +23,48 @@ class GraphOpsSpec extends SparkSpec {
     assert(dist.keySet === Set(0L, 1L, 2L, 3L))
   }
 
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  test("sssp in-task path matches the relational loop row for row, schema included") {
+    val hand = Seq((0L, 1L, 1L), (1L, 2L, 1L), (2L, 3L, 1L), (0L, 3L, 10L), (3L, 4L, 1L))
+      .toDF("src", "dst", "w")
+    val chain = (0L until 6L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "w")
+    val rnd = new scala.util.Random(42)
+    val randomEdges = Seq.fill(700)(
+      (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong, rnd.nextInt(20).toLong + 1))
+    // every 7th edge again verbatim (duplicate) and with a heavier weight (parallel)
+    val random = (randomEdges ++ randomEdges.grouped(7).map(_.head)
+      ++ randomEdges.grouped(7).map(_.head).map { case (a, b, w) => (a, b, w + 5) })
+      .toDF("src", "dst", "w")
+    val ints = hand.select(col("src").cast("int"), col("dst").cast("int"), col("w").cast("int"))
+    // null src never relaxes; null dst is the null id; a null w reaches 5
+    // with a null dist, which then relaxes to 6 with a null candidate.
+    val nulls = Seq[(Option[Long], Option[Long], Option[Long])](
+      (Some(0L), Some(1L), Some(2L)), (None, Some(2L), Some(1L)), (Some(1L), None, Some(1L)),
+      (Some(1L), Some(3L), None), (Some(0L), Some(3L), Some(5L)), (Some(1L), Some(5L), None),
+      (Some(5L), Some(6L), Some(1L)), (Some(5L), None, Some(2L))).toDF("src", "dst", "w")
+    val cases = Seq(
+      ("hand-computed", hand, 0L, 6), ("round-bound chain", chain, 0L, 3),
+      ("200-node random", random, 0L, 8), ("int columns", ints, 0L, 6),
+      ("null src/dst/w", nulls, 0L, 6), ("source in no edge", hand, 99L, 6),
+      ("iters = 1", random, 0L, 1))
+    cases.foreach { case (name, g, source, iters) =>
+      val inTask = GraphOps.sssp(g, source, iters)
+      assert(inTask.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions]),
+        s"$name: fixture graph did not take the in-task path")
+      val relational = withSqlConf(Threshold, "-1")(GraphOps.sssp(g, source, iters))
+      assert(inTask.schema === relational.schema, name)
+      assert(inTask.collect().toSeq === relational.orderBy("id").collect().toSeq, name)
+    }
+  }
+
+  test("building sssp on a fixture graph starts no Spark job; the relational loop does") {
+    val edges = (0L until 200L).map(i => (i, (i + 3) % 200, 1L)).toDF("src", "dst", "w")
+    assert(jobsStartedBy(GraphOps.sssp(edges, 0L, iters = 8)) === 0)
+    assert(jobsStartedBy(withSqlConf(Threshold, "-1")(GraphOps.sssp(edges, 0L, iters = 8))) > 0)
+  }
+
   test("routes reconstructs the shortest path and dist agrees with sssp") {
     //   0 →(1)→ 1 →(1)→ 2 →(1)→ 3 ; 0 →(10)→ 3 ; 3 →(1)→ 4
     val edges = Seq((0L, 1L, 1L), (1L, 2L, 1L), (2L, 3L, 1L), (0L, 3L, 10L), (3L, 4L, 1L))
@@ -122,7 +164,7 @@ class GraphOpsSpec extends SparkSpec {
     // Tolerance: the returned frame (+ its CC edge input) may stay persisted.
     val edges = (0L until 200L).map(i => (i, (i + 3) % 200, 1L)).toDF("src", "dst", "w")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    GraphOps.sssp(edges, 0L, iters = 8).count()
+    withSqlConf(Threshold, "-1")(GraphOps.sssp(edges, 0L, iters = 8).count())
     GraphOps.connectedComponents(
       edges.select(col("src"), col("dst")), maxIters = 20).count()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,4 +19,44 @@ object TestSession {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** Runs `body` with one SQL conf key set, restoring the previous value
+    * (or unsetting it) afterwards, so the shared session is left as found. */
+  def withSqlConf[T](key: String, value: String)(body: => T): T = {
+    val previous = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally previous.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Number of Spark jobs `body` starts, counted by job group. Listener
+    * events arrive asynchronously but in order, so a marker job run after
+    * `body` bounds the count: once the listener has seen the marker, it has
+    * seen every job `body` started. */
+  def jobsStartedBy(body: => Any): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val started = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => started.incrementAndGet()
+          case `marker` => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
