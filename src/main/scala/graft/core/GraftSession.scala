@@ -9,6 +9,16 @@ import org.apache.spark.sql.SparkSession
   *    replace hand-tuned partition counts when data volume varies by 1000x.
   *  - shuffle.partitions defaults to the local core count here; on a real
   *    cluster this is overridden (AQE coalesces down from a high initial).
+  *    The builder never sets AQE's initial width,
+  *    `spark.sql.adaptive.coalescePartitions.initialPartitionNum`, so a
+  *    `-D` system property of that name reaches the session through
+  *    SparkConf's defaults. Round 12 measured 256 as the whale lever at
+  *    sf100 (BASELINE.md r12): the d11 pair aggregation kept its 12-stage
+  *    plan and partial aggregation, and its 35 GiB sorter spill dropped to
+  *    zero at flat wall; with zstd shuffle compression on top AQE
+  *    reshaped the plan (12→19 stages, +37% wall). Run one big-shuffle
+  *    query per JVM there: the two big stages' files coexist at ~the
+  *    box's free disk.
   *  - UTC session timezone everywhere: the reference's America/New_York
   *    localization (reference 实习一/实习一代码/test.py:65) is handled as
   *    explicit conversions, never implicit session state.
@@ -17,38 +27,24 @@ import org.apache.spark.sql.SparkSession
   *    derive timestamps explicitly (see Tables.events).
   */
 object GraftSession {
-  /** A non-negative integer read from env var `name` (default `default`),
-    * validated. Evaluated by lazy vals, so a bad value fails when a session
-    * is actually built, with a message naming the variable, not as an
-    * object-initializer ExceptionInInitializerError. */
-  private def nonNegativeEnv(name: String, default: Int, what: String): Int = {
-    val raw = sys.env.getOrElse(name, default.toString).trim
-    scala.util.Try(raw.toInt).toOption.filter(_ >= 0).getOrElse(
-      throw new IllegalArgumentException(s"$name must be a non-negative integer $what, got '$raw'"))
+  /** An integer of at least `min` read from env var `name` (default
+    * `default`; `env` is the process environment outside tests),
+    * validated. GraftSession evaluates it from lazy vals, so a bad value
+    * fails when a session is actually built, with a message naming the
+    * variable, not as an object-initializer ExceptionInInitializerError. */
+  private[graft] def intEnv(name: String, default: Int, min: Int, what: String,
+      env: collection.Map[String, String] = sys.env): Int = {
+    val raw = env.getOrElse(name, default.toString).trim
+    scala.util.Try(raw.toInt).toOption.filter(_ >= min).getOrElse(
+      throw new IllegalArgumentException(s"$name must be an integer >= $min ($what), got '$raw'"))
   }
 
   /** SPARK_GRAFT_OFFHEAP_GB (default 16; 0 = disable off-heap — the A/B
     * harness + small-corpus iterative escape hatch, BASELINE.md round 9). */
-  private lazy val offHeapGb: Int = nonNegativeEnv("SPARK_GRAFT_OFFHEAP_GB", 16, "GB count")
+  private lazy val offHeapGb: Int = intEnv("SPARK_GRAFT_OFFHEAP_GB", 16, 0, "GB count")
 
-  /** SPARK_GRAFT_INITIAL_PARTS (default 0 = off): AQE pre-coalesce shuffle
-    * width — "on a real cluster this is overridden (AQE coalesces down from
-    * a high initial)", made settable. Round-12 sf100 measurements
-    * (BASELINE.md r12): at 256 the d11 pair aggregation kept its 12-stage
-    * plan, partial aggregation intact, and its 35 GiB sorter spill dropped
-    * to ZERO at flat wall — this is the whale lever that works. The two
-    * alternatives both measured worse: an explicit repartition-on-keys at
-    * the aggregation bypasses map-side combine (raw pair stream overran
-    * the disk outright), and combining this knob with zstd shuffle
-    * compression reshaped AQE's decisions (12→19 stages, +25 GiB staged
-    * re-reads, +37% wall). Single-box caveat is DISK, not the knob: the
-    * two big stages' files coexist at ~the box's free space, so run one
-    * big-shuffle query per JVM with tmp corpora pruned. */
-  private lazy val initialParts: Int =
-    nonNegativeEnv("SPARK_GRAFT_INITIAL_PARTS", 0, "partition count")
-
-  def builder(cores: Int): SparkSession.Builder = {
-    val base = SparkSession.builder()
+  def builder(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -125,11 +121,6 @@ object GraftSession {
       // untouched (routing only). The round-15 A/B (OPTIMIZATION_r15.md,
       // BASELINE.md) re-measured the sort tax at sf1 and kept 0.
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-    if (initialParts > 0)
-      base.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts.toString)
-    else base
-  }
 
   def local(cores: Int = 4): SparkSession = {
     val spark = builder(cores).getOrCreate()

@@ -682,8 +682,9 @@ object DedupQueries extends QueryCatalog {
         // reduce but BYPASSES partial aggregation — the raw pair stream
         // (one row per shared shingle occurrence) overran the box's disk
         // outright. The whale lever that works is AQE's initial width
-        // (SPARK_GRAFT_INITIAL_PARTS=256: same 12-stage plan, sorter spill
-        // 35 GiB -> 0, wall flat — see GraftSession + BASELINE.md r12).
+        // (spark.sql.adaptive.coalescePartitions.initialPartitionNum=256:
+        // same 12-stage plan, sorter spill 35 GiB -> 0, wall flat — see
+        // GraftSession + BASELINE.md r12).
         val inter = sh.select(col("doc_id").as("id_a"), col("sh"))
           .join(sh.select(col("doc_id").as("id_b"), col("sh")), "sh")
           .filter(col("id_a") < col("id_b"))

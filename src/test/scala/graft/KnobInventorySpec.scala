@@ -32,4 +32,19 @@ class KnobInventorySpec extends AnyFunSuite {
     if (unlisted.nonEmpty) fail(s"read under src/main/scala but not in the README table: ${unlisted.mkString(", ")}")
     if (stale.nonEmpty) fail(s"in the README table but not read under src/main/scala: ${stale.mkString(", ")}")
   }
+
+  test("an integer knob takes its default or a valid value, and a bad value fails naming the variable") {
+    import graft.core.GraftSession.intEnv
+    assert(intEnv("SPARK_GRAFT_CPUS", 4, 1, "core count", Map.empty) == 4)
+    assert(intEnv("SPARK_GRAFT_CPUS", 4, 1, "core count", Map("SPARK_GRAFT_CPUS" -> " 8 ")) == 8)
+    assert(intEnv("SPARK_GRAFT_OFFHEAP_GB", 16, 0, "GB count", Map("SPARK_GRAFT_OFFHEAP_GB" -> "0")) == 0)
+    Seq("0", "-2", "1.5", "eight").foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        intEnv("SPARK_GRAFT_CPUS", 4, 1, "core count", Map("SPARK_GRAFT_CPUS" -> bad)))
+      assert(e.getMessage == s"SPARK_GRAFT_CPUS must be an integer >= 1 (core count), got '$bad'")
+    }
+    val e = intercept[IllegalArgumentException](
+      intEnv("SPARK_GRAFT_OFFHEAP_GB", 16, 0, "GB count", Map("SPARK_GRAFT_OFFHEAP_GB" -> "-1")))
+    assert(e.getMessage == "SPARK_GRAFT_OFFHEAP_GB must be an integer >= 0 (GB count), got '-1'")
+  }
 }

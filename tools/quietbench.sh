@@ -19,7 +19,7 @@
 # requires mem_ref_mt below 1.5x its pinned quiet reference.
 #
 # Pinned quiet references (round 7, BASELINE.md "Pinned quiet
-# references"; keep in sync with graft.Bench.Quiet*): cpu_ref 0.49,
+# references"; keep in sync with graft.ops.CpuWitness.Quiet*): cpu_ref 0.49,
 # mem_ref 0.266, mem_ref_mt 0.342 — observed floors over all recorded
 # runs. Gates sit above the healthy band (cpu 0.49-0.57 observed while
 # running AT floors), not at the floor itself.
