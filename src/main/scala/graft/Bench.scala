@@ -41,7 +41,8 @@ object Bench {
 
   /** `s` as a JSON string literal: quoted, with `"`, `\` and control
     * characters escaped, so a path can't break a JSON parse of the bench
-    * line. */
+    * line, nor a tab or newline in a query's SQL a parse of Verify's
+    * `oracle_sql.json`. */
   def jsonString(s: String): String = {
     val b = new StringBuilder("\"")
     s.foreach {

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object GbtBandProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val cpus = graft.core.GraftSession.intEnv("SPARK_GRAFT_CPUS", 8, 1, "core count")
     val spark = graft.core.GraftSession.local(cpus)
 
     def report(name: String, pred: org.apache.spark.sql.DataFrame): Unit = {

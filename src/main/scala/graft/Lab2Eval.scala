@@ -16,7 +16,7 @@ object Lab2Eval {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1458644L
     val maxIter = if (args.length > 1) args(1).toInt else 30
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.core.GraftSession.intEnv("SPARK_GRAFT_CPUS", 32, 1, "core count")
     val spark = graft.core.GraftSession.local(cpus)
 
     val trips = TripSynthetic.trips(spark, n)

@@ -19,7 +19,7 @@ object PlanDump {
     val outDir = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val filter = if (args.length > 2) Some(args(2).r) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.core.GraftSession.intEnv("SPARK_GRAFT_CPUS", 32, 1, "core count")
     val spark = graft.core.GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     val names = SparkEntry.queries.keys.toSeq.sorted

@@ -143,7 +143,7 @@ object StreamScaleEvidence {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = graft.core.GraftSession.intEnv("SPARK_GRAFT_CPUS", 4, 1, "core count")
     // Machine-speed witness header: state-row counts below are
     // noise-immune, but the sec fields are only comparable across runs at
     // matching witness values (ops.CpuWitness).

@@ -9,7 +9,7 @@ object Verify {
     val outDir = args(1)
     // Optional third arg: regex over query names for fast dev iteration.
     val nameFilter = if (args.length > 2) Some(args(2).r) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = graft.core.GraftSession.intEnv("SPARK_GRAFT_CPUS", 4, 1, "core count")
     val spark = graft.core.GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -23,21 +23,10 @@ object Verify {
       // Same between-queries block hygiene as Bench (see there).
       graft.core.GraftSession.releaseTransientBlocks(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => nameFilter.forall(_.findFirstIn(k).isDefined) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

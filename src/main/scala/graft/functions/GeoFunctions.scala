@@ -42,10 +42,6 @@ object GeoFunctions {
     abs(lat2 - lat1) * kmPerDegLat + abs(lon2 - lon1) * kmPerDegLat * cos(meanLat)
   }
 
-  /** Axis-aligned grid-cell id for bucketed spatial joins: floor((v-origin)/size). */
-  def gridCell(v: Column, origin: Double, size: Double): Column =
-    floor((v - lit(origin)) / lit(size))
-
   /** WGS84 semi-major axis used by Web Mercator (EPSG:3857). */
   val WebMercatorR = 6378137.0
 

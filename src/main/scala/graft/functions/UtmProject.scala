@@ -148,9 +148,4 @@ object UtmProject {
     ColumnBridge.column(StProjectUtm(
       ColumnBridge.expression(lon.cast("double")),
       ColumnBridge.expression(lat.cast("double")), zone))
-
-  def unUtm(easting: Column, northing: Column, zone: Int = 18): Column =
-    ColumnBridge.column(StUnprojectUtm(
-      ColumnBridge.expression(easting.cast("double")),
-      ColumnBridge.expression(northing.cast("double")), zone))
 }

@@ -95,13 +95,4 @@ object VectorFunctions {
 
   def cosineSql(a: String, b: String, dim: Int): String =
     s"(${dotSql(a, b, dim)}) / (sqrt(${dotSql(a, a, dim)}) * sqrt(${dotSql(b, b, dim)}))"
-
-  def lshBucketSql(emb: String, planes: Int, dim: Int): String = {
-    val dots = (0 until planes).map { j =>
-      s"""CASE WHEN list_sum([ $emb[i+1]::DOUBLE *
-         |  ((((${j * 64} + i) * 2654435761) % 1000) / 1000.0 - 0.5)
-         |  for i in generate_series(0, ${dim - 1}) ]) > 0 THEN ${1 << j} ELSE 0 END""".stripMargin
-    }
-    dots.mkString("(", " + ", ")")
-  }
 }

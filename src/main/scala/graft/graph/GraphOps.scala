@@ -1,7 +1,10 @@
 package graft.graph
 
+import graft.core.Materialize
+import graft.core.Materialize.Signature
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBlocks
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,8 +17,10 @@ import scala.collection.mutable
   * Model: `edges(src, dst, w)` (directed; callers union reversed edges for
   * undirected semantics). No driver-side adjacency — every step is a join,
   * so the graph can be arbitrarily large; only the frontier/dist state is
-  * iterated. Each round persists and materializes the new state then drops
-  * the old one, keeping lineage flat (no exponential plan growth).
+  * iterated. Each operator supplies its init state and one round; the
+  * round policy — cutting each round's lineage (no exponential plan
+  * growth), releasing superseded rounds' blocks, the fixpoint exit and
+  * dropping the loop's cached inputs — belongs to core.Materialize.iterate.
   *
   * One exception: [[sssp]] (and so [[reachable]]) runs all of its rounds
   * inside one task when its edges are integral and their estimated size is
@@ -55,8 +60,8 @@ object GraphOps {
     * CRITICAL iterative-DataFrame detail for the relational loop: each round
     * references the previous state twice (relaxation + union), so composing
     * rounds lazily doubles the logical plan per round — 2^iters leaves and
-    * exponential Catalyst analysis time. Every round truncates lineage via
-    * core.Materialize.cutLazy — reliable `checkpoint` when the context has a
+    * exponential Catalyst analysis time. core.Materialize.iterate truncates
+    * lineage every round — reliable `checkpoint` when the context has a
     * checkpoint dir (cluster mode, survives executor loss), `localCheckpoint`
     * otherwise — and the fixpoint test rides the same materialization. */
   def sssp(edges: DataFrame, source: Long, iters: Int): DataFrame = {
@@ -69,7 +74,14 @@ object GraphOps {
       e.select(col("e_src").cast("long"), col("e_dst").cast("long"), col("e_w").cast("long"))
         .coalesce(1)
         .mapPartitions(rows => ssspRounds(rows, source, iters))(Encoders.row(schema))
-    } else ssspRelational(e, start, iters)
+    } else {
+      e.persist(StorageLevel.MEMORY_AND_DISK)
+      // The start state's signature is (1, 0), so a first round that relaxes
+      // no edge already ends the loop.
+      val signature = Signature(_.agg(count(lit(1)), sum("dist")).head(),
+        before = Some(Row(1L, 0L)))
+      Materialize.iterate(start, iters, Some(signature), Seq(e))(relaxRound(_, e))
+    }
   }
 
   private val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
@@ -85,33 +97,6 @@ object GraphOps {
     dist.unionByName(dist.join(e, col("id") === col("e_src"))
         .select(col("e_dst").as("id"), (col("dist") + col("e_w")).as("dist")))
       .groupBy("id").agg(min("dist").as("dist"))
-
-  private def ssspRelational(edges: DataFrame, start: DataFrame, iters: Int): DataFrame = {
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = graft.core.Materialize.cut(start)
-    var sig = (1L, 0L)
-    var converged = false
-    for (_ <- 1 to iters if !converged) {
-      // cutLazy + signature aggregate = ONE job per round (the aggregate
-      // scans every partition, materializing the checkpoint blocks as it
-      // goes) — the eager cut spent a whole extra job on materialization
-      // alone (guide §1.2: remove unnecessary passes).
-      val next = graft.core.Materialize.cutLazy(relaxRound(dist, e))
-      val row = next.agg(count(lit(1)).as("c"), sum("dist").as("s")).head()
-      val nextSig = (row.getLong(0), row.getLong(1))
-      converged = nextSig == sig
-      // `next` is eagerly materialized, so the previous round's checkpoint
-      // blocks are dead — drop them now (CheckpointBlocks: df.unpersist is
-      // a cache-manager no-op for checkpointed frames). Left to the
-      // ContextCleaner they accumulate across a suite run and GC-thrash
-      // unrelated queries.
-      org.apache.spark.sql.graft.CheckpointBlocks.release(dist)
-      dist = next
-      sig = nextSig
-    }
-    e.unpersist()
-    dist
-  }
 
   /** The relational loop's rounds over `(src, dst, w)` long rows held in one
     * task, emitted sorted by id (nulls first). Null semantics follow the
@@ -172,13 +157,11 @@ object GraphOps {
     * round; the path column is bounded by the hop budget, never
     * data-proportional. Returns `(id, dist, path)`. */
   def routes(edges: DataFrame, source: Long, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
     val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"), col("w").as("e_w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var st = graft.core.Materialize.cut(
-      spark.range(1).select(lit(source).as("id"),
-        struct(lit(0L).as("dist"), array(lit(source)).as("path")).as("sp")))
-    // Early-exit signature: unlike sssp (where unchanged count+Σdist ⟺
+    val start = edges.sparkSession.range(1).select(lit(source).as("id"),
+      struct(lit(0L).as("dist"), array(lit(source)).as("path")).as("sp"))
+    // Fixpoint signature: unlike sssp (where unchanged count+Σdist ⟺
     // unchanged state, distances being the whole state), a round here can
     // lex-improve a PATH at equal dist — so the signature hashes the full
     // (id, dist, path) state. state_{k+1} includes state_k in its min, so
@@ -186,27 +169,15 @@ object GraphOps {
     // is a fixpoint; the hash only detects it (a missed detection needs an
     // xor-of-xxhash64 collision). bit_xor, not sum: a Σ of 64-bit hashes
     // overflows under ANSI arithmetic; xor is order-free and closed.
-    var sig = (0L, 0L, 0L)
-    var converged = false
-    for (_ <- 1 to iters if !converged) {
-      val relaxed = st.join(e, col("id") === col("e_src"))
-        .select(col("e_dst").as("id"),
-          struct((col("sp.dist") + col("e_w")).as("dist"),
-            concat(col("sp.path"), array(col("e_dst"))).as("path")).as("sp"))
-      // cutLazy: the signature aggregate below doubles as the materializing
-      // action — one job per round instead of two (see sssp).
-      val next = graft.core.Materialize.cutLazy(st.unionByName(relaxed)
-        .groupBy("id").agg(min("sp").as("sp")))
-      val row = next.agg(count(lit(1)).as("c"), sum("sp.dist").as("s"),
-        expr("bit_xor(xxhash64(id, sp.dist, sp.path))").as("h")).head()
-      val nextSig = (row.getLong(0), row.getLong(1), row.getLong(2))
-      converged = nextSig == sig
-      org.apache.spark.sql.graft.CheckpointBlocks.release(st)
-      st = next
-      sig = nextSig
-    }
-    e.unpersist()
-    st.select(col("id"), col("sp.dist").as("dist"), col("sp.path").as("path"))
+    val signature = Signature(_.agg(count(lit(1)), sum("sp.dist"),
+      expr("bit_xor(xxhash64(id, sp.dist, sp.path))")).head())
+    Materialize.iterate(start, iters, Some(signature), Seq(e)) { st =>
+      st.unionByName(st.join(e, col("id") === col("e_src"))
+          .select(col("e_dst").as("id"),
+            struct((col("sp.dist") + col("e_w")).as("dist"),
+              concat(col("sp.path"), array(col("e_dst"))).as("path")).as("sp")))
+        .groupBy("id").agg(min("sp").as("sp"))
+    }.select(col("id"), col("sp.dist").as("dist"), col("sp.path").as("path"))
   }
 
   /** Connected components of an undirected graph given as `(src, dst)`
@@ -222,24 +193,22 @@ object GraphOps {
     * localCheckpoints: lazily composed rounds double the plan per iteration
     * (see sssp). */
   def connectedComponents(edges: DataFrame, maxIters: Int = 30): DataFrame = {
-    val spark = edges.sparkSession
     val nodes = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id"))).distinct()
-    var labels = graft.core.Materialize.cut(nodes.select(col("id"), col("id").as("label")))
     // Round 1 contracts straight off the caller's edge frame (the old eager
     // cut of `active` spent one whole job copying it — guide §1.2); from
     // round 2 on, `active` is the previous round's checkpointed contraction.
     var active = edges.select(col("src").as("aid"), col("dst").as("bid"))
-    // The frame whose checkpoint blocks back `active` — released one round
+    // The contraction built by the round just run, and the one whose
+    // checkpoint blocks back `active`: the latter is released one round
     // later, once the next round's job (which reads it through the new
     // contraction's lineage) has completed (dropping per-round checkpoints
-    // otherwise leaks blocks suite-wide, see sssp). null in round 1: the
-    // caller's edge frame is NOT ours to release (it may itself be
-    // checkpointed — releasing it would truncate the caller's lineage with
-    // blocks gone).
-    var activeSource: DataFrame = null
-    var sig = -1L
-    var converged = false
+    // otherwise leaks blocks suite-wide, see Materialize.iterate). Both are
+    // None in round 1: the caller's edge frame is NOT ours to release (it
+    // may itself be checkpointed — releasing it would truncate the
+    // caller's lineage with blocks gone).
+    var fresh = Option.empty[DataFrame]
+    var held = Option.empty[DataFrame]
     // Once the contraction comes back EMPTY every later contraction is
     // provably empty too (active only shrinks) — the remaining rounds are
     // pure pointer-jump chain collapse, so the contraction work is skipped
@@ -263,26 +232,39 @@ object GraphOps {
     // the snapshot adds bumps, which can DELAY edgesDone (extra contraction
     // rounds, a performance cost) but never set it early, so it never
     // changes a result.
-    val contractedRows = spark.sparkContext.longAccumulator("cc_contracted_rows")
+    val contractedRows = edges.sparkSession.sparkContext.longAccumulator("cc_contracted_rows")
     def bump(c: org.apache.spark.sql.Column) =
       graft.functions.RowTouch.touch(c, contractedRows)
-    for (_ <- 1 to maxIters if !converged) {
+    var accBefore = 0L
+    def round(labels: DataFrame): DataFrame = {
+      // The previous round's job has run: its contraction is materialized,
+      // so the one before it is dead, and the accumulator says whether it
+      // contracted anything.
+      if (fresh.isDefined) {
+        held.foreach(CheckpointBlocks.release)
+        held = fresh
+        fresh = None
+        if (contractedRows.value == accBefore) edgesDone = true
+      }
       // Snapshot FIRST: under AQE, merely BUILDING the round's lazy
       // checkpoint (queryExecution.toRdd inside cutLazy) already runs the
       // plan's shuffle stages as eager jobs — the contraction's bumps land
       // before any explicit action, so a later snapshot would read them as
       // "already there" and misdiagnose a live contraction as empty
       // (caught by DbscanSpec: 68 vs 27 components).
-      val accBefore = contractedRows.value
-      val viaNbr =
-        if (edgesDone) None
+      accBefore = contractedRows.value
+      // Without a contraction, stepped is value-identical to `labels`
+      // (∪ ∅ then groupBy-min is the identity on a keyed label frame), so
+      // the union+aggregate is skipped in the jump-only phase.
+      val stepped =
+        if (edgesDone) labels
         else {
-          // cutLazy with NO materializing action of its own: the relabel
-          // job below both computes/stores these blocks and reads them
+          // cutLazy with NO materializing action of its own: the round's
+          // signature job both computes/stores these blocks and reads them
           // (its union scans every partition, satisfying the cutLazy
           // full-scan contract). The bump rides the load-bearing `la`
           // column AFTER the distinct so column pruning can't drop it.
-          val contracted = graft.core.Materialize.cutLazy(active
+          val contracted = Materialize.cutLazy(active
             .join(labels.select(col("id").as("aid"), col("label").as("la")), "aid")
             .join(labels.select(col("id").as("bid"), col("label").as("lb")), "bid")
             .filter(col("la") =!= col("lb"))
@@ -290,42 +272,23 @@ object GraphOps {
             .distinct()
             .select(bump(col("la")).as("la"), col("lb")))
           active = contracted.select(col("la").as("aid"), col("lb").as("bid"))
-          Some((contracted,
-            contracted.select(col("la").as("id"), col("lb").as("label"))
-              .unionByName(contracted.select(col("lb").as("id"), col("la").as("label")))))
+          fresh = Some(contracted)
+          labels.unionByName(contracted.select(col("la").as("id"), col("lb").as("label"))
+              .unionByName(contracted.select(col("lb").as("id"), col("la").as("label"))))
+            .groupBy("id").agg(min("label").as("label"))
         }
-      // stepped with an empty contraction is value-identical to `labels`
-      // (∪ ∅ then groupBy-min is the identity on a keyed label frame), so
-      // the union+aggregate is skipped in the jump-only phase.
-      val stepped = viaNbr.fold(labels) { case (_, v) =>
-        labels.unionByName(v).groupBy("id").agg(min("label").as("label")) }
       val jumped = stepped.as("l1")
         .join(stepped.select(col("id").as("jid"), col("label").as("jlabel")).as("l2"),
           col("l1.label") === col("l2.jid"))
         .select(col("l1.id").as("id"), col("jlabel").as("label"))
-      // cutLazy: the signature aggregate doubles as the materializing
-      // action for BOTH checkpoints — contraction + relabel + convergence
-      // test are ONE job per round.
-      val next = graft.core.Materialize.cutLazy(stepped.unionByName(jumped)
-        .groupBy("id").agg(min("label").as("label")))
-      val row = next.agg(sum("label")).head()
-      val s = if (row.isNullAt(0)) Long.MinValue else row.getLong(0)
-      converged = s == sig
-      viaNbr.foreach { case (contracted, _) =>
-        // This round's contraction is materialized now — the previous
-        // round's blocks (read through its lineage during the job) are dead.
-        if (activeSource ne null)
-          org.apache.spark.sql.graft.CheckpointBlocks.release(activeSource)
-        activeSource = contracted
-        if (contractedRows.value == accBefore) edgesDone = true
-      }
-      org.apache.spark.sql.graft.CheckpointBlocks.release(labels)
-      labels = next
-      sig = s
+      stepped.unionByName(jumped).groupBy("id").agg(min("label").as("label"))
     }
-    if (activeSource ne null)
-      org.apache.spark.sql.graft.CheckpointBlocks.release(activeSource)
-    labels.withColumnRenamed("label", "component")
+    // The sum(label) signature is one job per round that fuses contraction,
+    // relabel and convergence test.
+    try Materialize.iterate(nodes.select(col("id"), col("id").as("label")), maxIters,
+        Some(Signature(_.agg(sum("label")).head())))(round)
+      .withColumnRenamed("label", "component")
+    finally (fresh ++ held).foreach(CheckpointBlocks.release)
   }
 
   /** PageRank over `edges(src, dst)` with damping 0.85, run for exactly
@@ -351,9 +314,8 @@ object GraphOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.count()
     val teleport = (15L * scale) / (100L * n)
-    var pr = graft.core.Materialize.cut(
-      nodes.select(col("id"), lit(scale / n).as("pr")))
-    for (_ <- 1 to iters) {
+    Materialize.iterate(nodes.select(col("id"), lit(scale / n).as("pr")), iters,
+        cached = Seq(e, nodes, outdeg)) { pr =>
       // The dangling-mass scalar rides the plan as a broadcast 1-row frame
       // instead of a driver-side action: one job per round, not two.
       val dang = pr.join(outdeg, Seq("id"), "left_anti")
@@ -363,16 +325,11 @@ object GraphOps {
         .select(col("e_dst").as("id"),
           expr("(pr * 85) div (100 * od)").as("c"))
         .groupBy("id").agg(sum("c").as("inflow"))
-      val next = graft.core.Materialize.cut(
-        nodes.join(inflow, Seq("id"), "left").crossJoin(broadcast(dang))
-          .select(col("id"),
-            (coalesce(col("inflow"), lit(0L)) + lit(teleport)
-              + expr(s"(ds * 85) div ${100L * n}")).as("pr")))
-      org.apache.spark.sql.graft.CheckpointBlocks.release(pr)
-      pr = next
+      nodes.join(inflow, Seq("id"), "left").crossJoin(broadcast(dang))
+        .select(col("id"),
+          (coalesce(col("inflow"), lit(0L)) + lit(teleport)
+            + expr(s"(ds * 85) div ${100L * n}")).as("pr"))
     }
-    e.unpersist(); nodes.unpersist(); outdeg.unpersist()
-    pr
   }
 
   /** Synchronous label-propagation communities over `edges(src, dst)`,
@@ -395,23 +352,17 @@ object GraphOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = und.select("id").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var lbl = graft.core.Materialize.cut(
-      nodes.select(col("id"), col("id").as("lbl")))
-    for (_ <- 1 to iters) {
+    Materialize.iterate(nodes.select(col("id"), col("id").as("lbl")), iters,
+        cached = Seq(und, nodes)) { lbl =>
       val votes = und
         .join(lbl.select(col("id").as("nbr"), col("lbl").as("nlbl")), "nbr")
         .groupBy("id", "nlbl").agg(count(lit(1)).as("c"))
       val best = votes.groupBy("id")
         .agg(max(struct(col("c"), (-col("nlbl")).as("neg"))).as("m"))
         .select(col("id"), (-col("m.neg")).as("winner"))
-      val next = graft.core.Materialize.cut(
-        nodes.join(best, Seq("id"), "left")
-          .select(col("id"), coalesce(col("winner"), col("id")).as("lbl")))
-      org.apache.spark.sql.graft.CheckpointBlocks.release(lbl)
-      lbl = next
+      nodes.join(best, Seq("id"), "left")
+        .select(col("id"), coalesce(col("winner"), col("id")).as("lbl"))
     }
-    und.unpersist(); nodes.unpersist()
-    lbl
   }
 
   /** k-core peeling bounded to exactly `iters` rounds (no early exit — a
@@ -427,22 +378,17 @@ object GraphOps {
     * every round strictly shrinks the edge set, so a fixed budget gives a
     * sound over-approximation of the true k-core at any scale. */
   def kCoreEdges(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    var live = graft.core.Materialize.cut(
-      edges.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") < col("b")).distinct())
-    for (_ <- 1 to iters) {
+    val canonical = edges.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") < col("b")).distinct()
+    Materialize.iterate(canonical, iters) { live =>
       val deg = live.select(col("a").as("id"))
         .unionByName(live.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("degree"))
       val keep = deg.filter(col("degree") >= k).select("id")
-      val next = graft.core.Materialize.cut(
-        live.join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-          .select("a", "b"))
-      org.apache.spark.sql.graft.CheckpointBlocks.release(live)
-      live = next
+      live.join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
+        .select("a", "b")
     }
-    live
   }
 }

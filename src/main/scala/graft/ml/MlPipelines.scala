@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{PCA, VectorAssembler}
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.ml.tuning.{ParamGridBuilder, TrainValidationSplit}
 import org.apache.spark.sql.DataFrame
@@ -105,48 +106,67 @@ object MlPipelines {
   def gbtFitHpo(train: DataFrame, valid: DataFrame, features: Seq[String],
       labelCol: String, maxIter: Int = 10, seed: Long = 42L)
       : (DataFrame, Int, Double, Array[Double], Long) = {
+    val (pred, best, importances, nTrain) =
+      gbtSearch(train, valid, features, labelCol, maxIter, seed) { gbt =>
+        new ParamGridBuilder()
+          .addGrid(gbt.maxDepth, Array(3, 4))
+          .addGrid(gbt.stepSize, Array(0.1, 0.3))
+          .build()
+      }
+    (pred, best.getMaxDepth, best.getStepSize, importances, nTrain)
+  }
+
+  /** The search harness [[gbtFitHpo]] and [[gbtFitRandomSearch]] share:
+    * TrainValidationSplit over `candidates(gbt)`, then ONE final fit at the
+    * winner's maxDepth, stepSize, subsamplingRate and minInstancesPerNode (a
+    * grid that leaves the last two at their defaults fits the same model as
+    * setting only the first two). Returns (valid predictions, the winning
+    * search model, the final model's per-feature importances, training-row
+    * count). */
+  private def gbtSearch(train: DataFrame, valid: DataFrame, features: Seq[String],
+      labelCol: String, maxIter: Int, seed: Long)(candidates: GBTRegressor => Array[ParamMap])
+      : (DataFrame, GBTRegressionModel, Array[Double], Long) = {
     val asm = new VectorAssembler().setInputCols(features.toArray).setOutputCol("features")
     val trainF = asm.transform(train).select(col("features"), col(labelCol)).persist()
-    // Materialize the cache before the grid: TrainValidationSplit launches
-    // `parallelism` fits concurrently, and racing them into a cold cache
-    // makes each compute (and block on) the assembly instead of reading it.
-    val nTrain = trainF.count()
-    // HPO sample: 20% capped at a FIXED row budget. A bare fraction grows
-    // linearly with data — at cluster scale the "cheap" grid search would
-    // scan 20% of the corpus per candidate; model SHAPE saturates far below
-    // the cap, so the budget, not the corpus, bounds grid cost.
-    val hpoCapRows = 200000L
-    val hpoFraction = math.min(0.2, hpoCapRows.toDouble / math.max(1L, nTrain))
-    val gbt = new GBTRegressor().setFeaturesCol("features").setLabelCol(labelCol)
-      .setMaxIter(5).setSeed(seed)
-    val grid = new ParamGridBuilder()
-      .addGrid(gbt.maxDepth, Array(3, 4))
-      .addGrid(gbt.stepSize, Array(0.1, 0.3))
-      .build()
-    val tvs = new TrainValidationSplit()
-      .setEstimator(gbt)
-      .setEvaluator(new RegressionEvaluator().setLabelCol(labelCol).setMetricName("rmse"))
-      .setEstimatorParamMaps(grid)
-      .setTrainRatio(0.75).setSeed(seed).setParallelism(4)
-    val best = tvs.fit(trainF.sample(withReplacement = false, hpoFraction, seed))
-      .bestModel.asInstanceOf[GBTRegressionModel]
-    // The FINAL fit gets the same fixed-row-budget treatment as the grid
-    // (10x the budget — the winner deserves a deeper look, but not a
-    // corpus-proportional one): MLlib's GBT caches its binned training
-    // representation plus one persisted prediction/error RDD per boosting
-    // round, so fitting the raw corpus scales the heap with the data — the
-    // sf10 whale measured m12 at 61 GB live / 23 s GC pauses / 26x per data
-    // decade fitting 42M rows whose model quality saturates around 10^6.
-    // The validation TRANSFORM below still scores the FULL validation
-    // split, so n_valid and the band booleans keep their oracle meaning.
-    val trainFit = capFitRows(trainF, nTrain, seed)
-    val model = new GBTRegressor().setFeaturesCol("features").setLabelCol(labelCol)
-      .setMaxIter(maxIter).setMaxDepth(best.getMaxDepth)
-      .setStepSize(best.getStepSize).setSeed(seed)
-      .fit(trainFit)
-    trainF.unpersist()
-    (model.transform(asm.transform(valid)).drop("features"),
-      best.getMaxDepth, best.getStepSize, model.featureImportances.toArray, nTrain)
+    try {
+      // Materialize the cache before the search: TrainValidationSplit
+      // launches `parallelism` fits concurrently, and racing them into a
+      // cold cache makes each compute (and block on) the assembly instead
+      // of reading it.
+      val nTrain = trainF.count()
+      // HPO sample: 20% capped at a FIXED row budget. A bare fraction grows
+      // linearly with data — at cluster scale the "cheap" search would
+      // scan 20% of the corpus per candidate; model SHAPE saturates far
+      // below the cap, so the budget, not the corpus, bounds search cost.
+      val hpoCapRows = 200000L
+      val hpoFraction = math.min(0.2, hpoCapRows.toDouble / math.max(1L, nTrain))
+      val gbt = new GBTRegressor().setFeaturesCol("features").setLabelCol(labelCol)
+        .setMaxIter(5).setSeed(seed)
+      val tvs = new TrainValidationSplit()
+        .setEstimator(gbt)
+        .setEvaluator(new RegressionEvaluator().setLabelCol(labelCol).setMetricName("rmse"))
+        .setEstimatorParamMaps(candidates(gbt))
+        .setTrainRatio(0.75).setSeed(seed).setParallelism(4)
+      val best = tvs.fit(trainF.sample(withReplacement = false, hpoFraction, seed))
+        .bestModel.asInstanceOf[GBTRegressionModel]
+      // The FINAL fit gets the same fixed-row-budget treatment as the
+      // search (10x the budget — the winner deserves a deeper look, but
+      // not a corpus-proportional one): MLlib's GBT caches its binned
+      // training representation plus one persisted prediction/error RDD
+      // per boosting round, so fitting the raw corpus scales the heap with
+      // the data — the sf10 whale measured m12 at 61 GB live / 23 s GC
+      // pauses / 26x per data decade fitting 42M rows whose model quality
+      // saturates around 10^6. The validation TRANSFORM below still scores
+      // the FULL validation split, so n_valid and the band booleans keep
+      // their oracle meaning.
+      val model = new GBTRegressor().setFeaturesCol("features").setLabelCol(labelCol)
+        .setMaxIter(maxIter).setMaxDepth(best.getMaxDepth)
+        .setStepSize(best.getStepSize).setSubsamplingRate(best.getSubsamplingRate)
+        .setMinInstancesPerNode(best.getMinInstancesPerNode).setSeed(seed)
+        .fit(capFitRows(trainF, nTrain, seed))
+      (model.transform(asm.transform(valid)).drop("features"), best,
+        model.featureImportances.toArray, nTrain)
+    } finally { trainF.unpersist(); () }
   }
 
   /** Seeded RANDOM-SEARCH HPO — the reference's Optuna search semantics
@@ -179,45 +199,26 @@ object MlPipelines {
       math.exp(math.log(lo) + nextDouble() * (math.log(hi) - math.log(lo)))
     def pick[A](xs: Seq[A]): A = xs((nextDouble() * xs.size).toInt.min(xs.size - 1))
 
-    val asm = new VectorAssembler().setInputCols(features.toArray).setOutputCol("features")
-    val trainF = asm.transform(train).select(col("features"), col(labelCol)).persist()
-    val nTrain = trainF.count()
-    val hpoCapRows = 200000L
-    val hpoFraction = math.min(0.2, hpoCapRows.toDouble / math.max(1L, nTrain))
-    val gbt = new GBTRegressor().setFeaturesCol("features").setLabelCol(labelCol)
-      .setMaxIter(5).setSeed(seed)
-    val trials = (0 until nTrials).map { _ =>
-      // draw order is part of the seeded contract — keep it stable
-      val depth = pick(Seq(3, 4, 5, 7))
-      val step = logUniform(0.01, 0.3)
-      val sub = pick(Seq(0.4, 0.5, 0.6, 0.7, 0.8, 1.0))
-      val minInst = 1 + (nextDouble() * 16).toInt.min(15)
-      new org.apache.spark.ml.param.ParamMap()
-        .put(gbt.maxDepth, depth)
-        .put(gbt.stepSize, step)
-        .put(gbt.subsamplingRate, sub)
-        .put(gbt.minInstancesPerNode, minInst)
-    }.toArray
-    val tvs = new TrainValidationSplit()
-      .setEstimator(gbt)
-      .setEvaluator(new RegressionEvaluator().setLabelCol(labelCol).setMetricName("rmse"))
-      .setEstimatorParamMaps(trials)
-      .setTrainRatio(0.75).setSeed(seed).setParallelism(4)
-    val best = tvs.fit(trainF.sample(withReplacement = false, hpoFraction, seed))
-      .bestModel.asInstanceOf[GBTRegressionModel]
-    val trainFit = capFitRows(trainF, nTrain, seed)
-    val model = new GBTRegressor().setFeaturesCol("features").setLabelCol(labelCol)
-      .setMaxIter(maxIter).setMaxDepth(best.getMaxDepth)
-      .setStepSize(best.getStepSize).setSubsamplingRate(best.getSubsamplingRate)
-      .setMinInstancesPerNode(best.getMinInstancesPerNode).setSeed(seed)
-      .fit(trainFit)
-    trainF.unpersist()
+    val (pred, best, importances, _) =
+      gbtSearch(train, valid, features, labelCol, maxIter, seed) { gbt =>
+        (0 until nTrials).map { _ =>
+          // draw order is part of the seeded contract — keep it stable
+          val depth = pick(Seq(3, 4, 5, 7))
+          val step = logUniform(0.01, 0.3)
+          val sub = pick(Seq(0.4, 0.5, 0.6, 0.7, 0.8, 1.0))
+          val minInst = 1 + (nextDouble() * 16).toInt.min(15)
+          new ParamMap()
+            .put(gbt.maxDepth, depth)
+            .put(gbt.stepSize, step)
+            .put(gbt.subsamplingRate, sub)
+            .put(gbt.minInstancesPerNode, minInst)
+        }.toArray
+      }
     val won = Map(
       "maxDepth" -> best.getMaxDepth.toDouble,
       "stepSize" -> best.getStepSize,
       "subsamplingRate" -> best.getSubsamplingRate,
       "minInstancesPerNode" -> best.getMinInstancesPerNode.toDouble)
-    (model.transform(asm.transform(valid)).drop("features"),
-      won, model.featureImportances.toArray)
+    (pred, won, importances)
   }
 }

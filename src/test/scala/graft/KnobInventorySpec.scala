@@ -33,6 +33,18 @@ class KnobInventorySpec extends AnyFunSuite {
     if (stale.nonEmpty) fail(s"in the README table but not read under src/main/scala: ${stale.mkString(", ")}")
   }
 
+  test("no SPARK_GRAFT_* lookup under src/main/scala is parsed with a bare .toInt") {
+    // A bare .toInt throws an unnamed NumberFormatException on a bad value;
+    // GraftSession.intEnv names the variable and the accepted range.
+    val bare = """"SPARK_GRAFT_[A-Z0-9_]+"[^\n]*\.toInt\b""".r
+    val hits = scalaFiles(new java.io.File("src/main/scala")).flatMap { f =>
+      read(f).linesIterator.zipWithIndex.collect {
+        case (line, i) if bare.findFirstIn(line).isDefined => s"${f.getPath}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(hits.isEmpty, s"parse these with GraftSession.intEnv:\n${hits.mkString("\n")}")
+  }
+
   test("an integer knob takes its default or a valid value, and a bad value fails naming the variable") {
     import graft.core.GraftSession.intEnv
     assert(intEnv("SPARK_GRAFT_CPUS", 4, 1, "core count", Map.empty) == 4)
