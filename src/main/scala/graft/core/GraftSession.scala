@@ -121,6 +121,19 @@ object GraftSession {
       // untouched (routing only). The round-15 A/B (OPTIMIZATION_r15.md,
       // BASELINE.md) re-measured the sort tax at sf1 and kept 0.
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      // Codegen reuse across streaming queries. Spark caches generated
+      // classes by (context classloader, code), and with artifact isolation
+      // on, each streaming query's cloned session runs under a fresh
+      // session classloader, so every bounded replay recompiled the same
+      // classes: w14 at sf0.1 (perfbench fixpoint, 4 cores, traced)
+      // compiled the same 18 classes on every warm replay, 0.52–0.61 s of
+      // compile time, while the batch query g2 compiled 0. With isolation
+      // off, a warm replay compiles 0 (StreamingSpec pins this through
+      // CodegenMetrics). Isolation keeps per-session JARs/files (Spark
+      // Connect artifacts) apart; this engine adds none and runs no Spark
+      // Connect, so it protects nothing here. Only settable when a session
+      // is created.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(cores: Int = 4): SparkSession = {
     val spark = builder(cores).getOrCreate()

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Streaming flavor of the lab-1 high-density pipeline (SURVEY.md §7.2;
   * batch semantics in graft.ops.Anomaly): tumbling hourly counts, threshold
@@ -12,6 +13,14 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Late-data policy: 1-hour watermark — state for an hour window is dropped
   * once the watermark passes, mirroring the batch gap rule (SURVEY §7.4.7).
+  *
+  * Bounded replays (`replayBounded*`) run a transformation over a parquet
+  * file with Trigger.AvailableNow. Complete-mode replays ([[replayBounded]],
+  * [[replayBoundedLarge]]) skip the watermark-only micro-batch, which in
+  * complete mode re-emits an unchanged table; append-mode replays
+  * ([[replayBoundedAppend]], [[replayBoundedJoin]]) keep it, because it
+  * emits the windows the final watermark closes. [[replayBounded]] returns
+  * a local one-partition frame over its memory sink's rows.
   */
 object EventsAnomaly {
 
@@ -129,17 +138,35 @@ object EventsAnomaly {
     parts
   }
 
+  private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   /** Run `body` (a streaming start/await bracket) with the session's
     * shuffle-partition conf pinned to [[streamShuffleParts]], restoring the
-    * caller's value after. A NEW streaming checkpoint pins its state
-    * partition count from this conf at first-batch planning, so the bracket
-    * only needs to span query start → termination; the batch rollups over
-    * the sink run at the session's normal width. */
-  private def withStreamParts[T](spark: SparkSession, parquetPath: String)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, streamShuffleParts(spark, parquetPath).toString)
-    try body finally spark.conf.set(key, prev)
+    * caller's values after, whether `body` returns or throws. A NEW
+    * streaming checkpoint pins its state partition count from this conf at
+    * first-batch planning, and a query reads its trigger confs from the
+    * session clone it takes at start, so the bracket only needs to span
+    * query start → termination; the batch rollups over the sink run at the
+    * session's normal width.
+    *
+    * `complete` also turns off the no-data micro-batch. Spark runs one extra
+    * batch with zero input once the watermark advances, to evict state and
+    * emit what the watermark closed. In complete mode an aggregate keeps all
+    * of its state and re-emits its whole table every batch, so that batch
+    * can only evict upstream state (w14's dedup ids) and re-emit an
+    * unchanged table: pure cost (w14 at sf0.1, 4 cores: 1.0–1.2 s of a
+    * 3–4 s warm replay, traced with perfbench). Append-mode replays must
+    * keep it: there it emits the windows the watermark closes, which no
+    * data batch of a bounded replay ever would. */
+  private def withReplayConf[T](spark: SparkSession, parquetPath: String,
+      complete: Boolean)(body: => T): T = {
+    val confs = Seq("spark.sql.shuffle.partitions" ->
+      streamShuffleParts(spark, parquetPath).toString) ++
+      (if (complete) Seq(NoDataBatchesKey -> "false") else Nil)
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   /** RAM-backed checkpoint dir for a bounded replay, when the host has one.
@@ -210,8 +237,13 @@ object EventsAnomaly {
     finally ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
   }
 
-  private def boundedSource(spark: SparkSession, parquetPath: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+  /** The bounded source's schema: one inference job, which a two-sided
+    * replay shares between its sides. */
+  private def sourceSchema(spark: SparkSession, parquetPath: String): StructType =
+    spark.read.parquet(parquetPath).schema
+
+  private def boundedSource(spark: SparkSession, parquetPath: String,
+      schema: StructType): DataFrame = {
     // File-stream sources require a directory: stream the parent dir with a
     // glob pinned to the one file.
     val f = new java.io.File(parquetPath)
@@ -220,10 +252,14 @@ object EventsAnomaly {
       .parquet(f.getParent)
   }
 
+  private def boundedSource(spark: SparkSession, parquetPath: String): DataFrame =
+    boundedSource(spark, parquetPath, sourceSchema(spark, parquetPath))
+
   /** Run a streaming transformation over a bounded parquet source with
     * Trigger.AvailableNow and a memory sink, returning the final result —
     * the replay harness that lets the correctness gate cover the streaming
-    * path with the same oracle as the batch query.
+    * path with the same oracle as the batch query. Complete mode, so the
+    * watermark-only micro-batch is skipped (see [[withReplayConf]]).
     *
     * MEMORY SINK CONTRACT: only for transforms whose complete-mode output
     * is aggregate-BOUNDED at any corpus size (hourly counts ≈ hours span,
@@ -232,17 +268,28 @@ object EventsAnomaly {
     * sf10 whale killed w11 exactly there (spark.driver.maxResultSize at
     * 10M events). Data-proportional complete aggregates use
     * [[replayBoundedLarge]]; data-proportional append emissions use the
-    * file-sink variants below. */
+    * file-sink variants below.
+    *
+    * The result is a LOCAL frame: the sink's rows, which the memory sink
+    * already holds in this JVM under the contract above, with its schema
+    * (nullability included), in one partition. A caller's rollup over it
+    * is then one job with no exchange (w14 at sf0.1: 3 jobs → 1, warm
+    * rollup 0.12–0.19 s → 0.04–0.05 s), and the sink's temp view is
+    * dropped instead of living for the whole session. */
   def replayBounded(spark: SparkSession, parquetPath: String,
       transform: DataFrame => DataFrame): DataFrame = {
     val name = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamParts(spark, parquetPath) {
-      runBounded(transform(boundedSource(spark, parquetPath)).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow()))
-      spark.table(name)
-    }
+    try {
+      withReplayConf(spark, parquetPath, complete = true) {
+        runBounded(transform(boundedSource(spark, parquetPath)).writeStream
+          .format("memory").queryName(name)
+          .outputMode("complete")
+          .trigger(Trigger.AvailableNow()))
+      }
+      val sink = spark.table(name)
+      spark.createDataFrame(java.util.Arrays.asList(sink.collect(): _*), sink.schema)
+        .coalesce(1)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** Complete-mode replay for DATA-PROPORTIONAL aggregates (session
@@ -252,14 +299,15 @@ object EventsAnomaly {
     * through the driver; the last batch's overwrite is the final state.
     * Complete mode is what keeps bounded-replay parity with the batch
     * oracle — in append mode the sessions still inside the final watermark
-    * horizon would stay in state and never emit. */
+    * horizon would stay in state and never emit — and, as in
+    * [[replayBounded]], it skips the watermark-only micro-batch. */
   def replayBoundedLarge(spark: SparkSession, parquetPath: String,
       transform: DataFrame => DataFrame): DataFrame = {
     val out = sinkDir(spark)
     val write: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => batch.write.mode("overwrite").parquet(out)
     val transformed = transform(boundedSource(spark, parquetPath))
-    withStreamParts(spark, parquetPath) {
+    withReplayConf(spark, parquetPath, complete = true) {
       runBounded(transformed.writeStream
         .outputMode("complete")
         .foreachBatch(write)
@@ -268,23 +316,19 @@ object EventsAnomaly {
     readSinkOrEmpty(spark, out, transformed.schema)
   }
 
-  /** Two-source APPEND-mode replay for stream-stream joins: each side gets
-    * its own file-stream instance over the same bounded source (two
-    * independent streams, as production would have two topics), the join's
-    * emitted rows accumulate in the memory sink. Complete mode is
-    * aggregation-only in Spark, so joins need this append variant. */
   /** Shared tail of the append-mode replays: a real parquet FILE sink (the
     * production shape for data-proportional emissions — join pairs and
     * per-event state outputs scale with the corpus, so a driver-side memory
     * sink is a maxResultSize OOM waiting for scale). Executors append
     * finished rows to the sink directory; the result is read back as a
     * plain parquet frame. File sinks require a checkpoint, so this variant
-    * always has one. */
+    * always has one. Append mode keeps the watermark-only micro-batch: it
+    * is the batch that emits the windows the final watermark closes. */
   private def runBoundedToFiles(spark: SparkSession, df: DataFrame,
       parquetPath: String): DataFrame = {
     val out = sinkDir(spark)
     val ckpt = requiredCheckpoint()
-    withStreamParts(spark, parquetPath) {
+    withReplayConf(spark, parquetPath, complete = false) {
       val q = df.writeStream
         .format("parquet").option("path", out)
         .outputMode("append")
@@ -297,11 +341,20 @@ object EventsAnomaly {
     readSinkOrEmpty(spark, out, df.schema)
   }
 
+  /** Two-source APPEND-mode replay for stream-stream joins: each side gets
+    * its own file-stream instance over the same bounded source (two
+    * independent streams, as production would have two topics), sharing one
+    * schema inference; the join's emitted rows accumulate in the file sink.
+    * Complete mode is aggregation-only in Spark, so joins need this append
+    * variant. */
   def replayBoundedJoin(spark: SparkSession, parquetPath: String,
-      transform: (DataFrame, DataFrame) => DataFrame): DataFrame =
+      transform: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val schema = sourceSchema(spark, parquetPath)
     runBoundedToFiles(spark,
-      transform(boundedSource(spark, parquetPath), boundedSource(spark, parquetPath)),
+      transform(boundedSource(spark, parquetPath, schema),
+        boundedSource(spark, parquetPath, schema)),
       parquetPath)
+  }
 
   /** Single-source APPEND-mode replay: for stateful operators that emit
     * rows incrementally (flatMapGroupsWithState) rather than maintaining a
