@@ -103,14 +103,19 @@ object EventsAnomaly {
     * VOLUME instead of inherited from the session core count (round-14,
     * guide §2.2/§2.5: partition counts must follow data, not the box).
     *
-    * Why: every stateful micro-batch pays a fixed per-state-partition cost
-    * (state store open/commit/maintenance, and at high thread counts a
-    * measured super-linear contention term), while the state itself is
-    * bounded by the watermark horizon. Measured on w15_stream_join at
-    * sf0.1 (40k join-state rows, warm rep): 32 partitions = 204 s task
-    * time / 9.5 s wall; 16 = 44 s / 5.0 s; 4 = 3.6 s / 2.9 s — the
-    * per-task cost itself GROWS with the partition count (6.4 s → 0.9 s),
-    * so inheriting local[32]'s default was pure overhead at this state
+    * Why: every stateful micro-batch pays a fixed cost per state partition
+    * (store open, commit and maintenance, each writing its own delta,
+    * checksum and log files, and at high thread counts a measured
+    * super-linear contention term), while the state itself is bounded by
+    * the watermark horizon. Under Hadoop's default checkpoint manager each
+    * of those files also forked `chmod`/`readlink` processes: w14 at sf0.1
+    * and 4 partitions spent 1.24 s of a warm replay in state commit, 0.06 s
+    * since [[withReplayConf]] installs [[NioCheckpointFileManager]]
+    * (perfbench fixpoint, traced, 4 cores). Measured on w15_stream_join at
+    * sf0.1 with the default manager (40k join-state rows, warm rep):
+    * 32 partitions = 204 s task time / 9.5 s wall; 16 = 44 s / 5.0 s;
+    * 4 = 3.6 s / 2.9 s — the per-task cost itself GROWS with the partition
+    * count (6.4 s → 0.9 s), so inheriting local[32]'s default was pure overhead at this state
     * size. The rule sizes partitions at one per ~32 MB of source bytes
     * (clamped to [4, 1024]) — sf0.1's ~4 MB stream runs at 4 and a
     * terabyte-scale stream derives hundreds. Results are
@@ -141,13 +146,22 @@ object EventsAnomaly {
   private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
   /** Run `body` (a streaming start/await bracket) with the session's
-    * shuffle-partition conf pinned to [[streamShuffleParts]], restoring the
-    * caller's values after, whether `body` returns or throws. A NEW
+    * shuffle-partition conf pinned to [[streamShuffleParts]] and the
+    * checkpoint file manager set to [[NioCheckpointFileManager]], restoring
+    * the caller's values after, whether `body` returns or throws. A NEW
     * streaming checkpoint pins its state partition count from this conf at
     * first-batch planning, and a query reads its trigger confs from the
     * session clone it takes at start, so the bracket only needs to span
     * query start → termination; the batch rollups over the sink run at the
     * session's normal width.
+    *
+    * The manager key reaches only what the query creates: its checkpoint
+    * under /dev/shm or java.io.tmpdir, deleted when the replay ends, and
+    * a file sink's `_spark_metadata` log. Those files are written without
+    * Hadoop's `.crc` sidecars and without forking a process per file
+    * (Hadoop's default manager → this one, one warm w14 replay at sf0.1
+    * on 4 cores: ~260 forks → 0; state commit 1,240 → 61 ms, query
+    * planning 376 → 43 ms, WAL commit 131 → 3 ms). Spark's own state checksums still apply.
     *
     * `complete` also turns off the no-data micro-batch. Spark runs one extra
     * batch with zero input once the watermark advances, to evict state and
@@ -160,8 +174,9 @@ object EventsAnomaly {
     * data batch of a bounded replay ever would. */
   private def withReplayConf[T](spark: SparkSession, parquetPath: String,
       complete: Boolean)(body: => T): T = {
-    val confs = Seq("spark.sql.shuffle.partitions" ->
-      streamShuffleParts(spark, parquetPath).toString) ++
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> streamShuffleParts(spark, parquetPath).toString,
+      NioCheckpointFileManager.ConfKey -> classOf[NioCheckpointFileManager].getName) ++
       (if (complete) Seq(NoDataBatchesKey -> "false") else Nil)
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -171,17 +186,19 @@ object EventsAnomaly {
 
   /** RAM-backed checkpoint dir for a bounded replay, when the host has one.
     *
-    * A replay is ephemeral BY CONSTRUCTION — bounded input, memory sink,
-    * the checkpoint is discarded the moment the query terminates — so its
-    * checkpoint needs none of the durability a production job's does, yet
-    * the default temp location puts it on real disk, where every state
-    * store delta + offset/commit log fsyncs. Measured (BASELINE.md
-    * "w10_stream_hourly: profiled anatomy", round 8, sf0.1, 32 state
-    * partitions): disk-synced checkpoints cost ~9 ms per state partition
-    * per batch of pure sync latency — ~0.3 s of the w10 replay —
-    * and that latency moves with host windows, which is exactly the noise
-    * a correctness/bench harness should not carry. Production jobs keep
-    * durable checkpoints; match durability to what the artifact needs. */
+    * A replay is ephemeral BY CONSTRUCTION — bounded input, the checkpoint
+    * is discarded the moment the query terminates — so its checkpoint
+    * needs none of the durability a production job's does, and RAM keeps
+    * its many small files off the disk. The round-8 anatomy (BASELINE.md
+    * "w10_stream_hourly: profiled anatomy", sf0.1, 32 state partitions)
+    * charged ~9 ms per state partition per batch to disk sync. Hadoop's
+    * local filesystem does not sync checkpoint files, and /dev/shm has
+    * nothing to sync; the per-file cost was the `chmod` and `readlink`
+    * processes Hadoop forks for every checkpoint file and `.crc` sidecar
+    * when no native libhadoop is loaded (~260 per warm w14 replay at sf0.1,
+    * 1.24 s of its state commit). [[withReplayConf]] removes them with
+    * [[NioCheckpointFileManager]]. Production jobs keep durable
+    * checkpoints; match durability to what the artifact needs. */
   private def ephemeralCheckpoint(): Option[String] = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite)

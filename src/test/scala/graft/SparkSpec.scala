@@ -3,6 +3,8 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -57,6 +59,24 @@ trait SparkSpec extends AnyFunSuite {
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Command lines of the OS processes this JVM starts while `body` runs,
+    * read from an in-process JFR recording of `jdk.ProcessStart` events. */
+  def processesStartedDuring(body: => Any): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    val dump = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .map(_.getString("command")).toSeq
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
     }
   }
 }

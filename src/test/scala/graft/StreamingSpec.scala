@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.streaming.EventsAnomaly
+import graft.streaming.{EventsAnomaly, NioCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -178,10 +179,11 @@ class StreamingSpec extends SparkSpec {
 
   test("a replay restores shuffle partitions and the no-data batch conf, also when its query throws") {
     val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.noDataMicroBatches.enabled")
-    def confs = keys.map(spark.conf.get)
+      "spark.sql.streaming.noDataMicroBatches.enabled", NioCheckpointFileManager.ConfKey)
+    def confs = keys.map(spark.conf.getOption)
     val boom = udf((id: Long) => if (id >= 0) throw new IllegalStateException("boom") else id)
-    withSqlConf(keys(0), "3")(withSqlConf(keys(1), "true") {
+    withSqlConf(keys(0), "3")(withSqlConf(keys(1), "true")(withSqlConf(keys(2),
+        classOf[FileContextBasedCheckpointFileManager].getName) {
       val before = confs
       withEventsFile(dupEvents) { path =>
         EventsAnomaly.replayBounded(spark, path, dedupCounts).collect()
@@ -197,7 +199,24 @@ class StreamingSpec extends SparkSpec {
           .exists(t => Option(t.getMessage).exists(_.contains("boom"))))
         assert(confs === before)
       }
-    })
+    }))
+  }
+
+  test("bounded replays start no process under their checkpoint dir") {
+    // Hadoop's local filesystem forks chmod/readlink per checkpoint file
+    // when no native libhadoop is loaded; NioCheckpointFileManager forks
+    // none. The probe process shows the recording sees forks at all.
+    withEventsFile(dupEvents) { path =>
+      val commands = processesStartedDuring {
+        EventsAnomaly.replayBounded(spark, path, dedupCounts).collect()
+        EventsAnomaly.replayBoundedAppend(spark, path, s => EventsAnomaly.hourlyCounts(s)).collect()
+        new ProcessBuilder("true", "graft-fork-probe").start().waitFor()
+      }
+      assert(commands.exists(_.contains("graft-fork-probe")))
+      val underCheckpoints = commands.filter(_.contains("graft-replay-"))
+      assert(underCheckpoints.size === 0,
+        s"of ${commands.size} processes, e.g. ${underCheckpoints.take(3).mkString("; ")}")
+    }
   }
 
   test("a second identical replay compiles no generated class") {
