@@ -2,8 +2,7 @@ package graft.ops
 
 /** The witness panel: host-state probes, their pinned quiet references,
   * and the one rule that turns readings into a floor-threshold factor.
-  * Used by Bench (suite run and its `--isolated` recheck child) and
-  * StreamScaleEvidence.
+  * Used by Bench (suite run and its `--isolated` recheck child).
   *
   * VM-host noise windows cut effective CPU speed ~1.5x for hours at a
   * time (BASELINE.md "Machine-speed witness": 21 unrelated queries flagged

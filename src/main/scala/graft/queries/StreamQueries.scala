@@ -55,7 +55,7 @@ object StreamQueries extends QueryCatalog {
 
     // The STREAMING path of the same sessionization: parquet file stream →
     // watermark → session_window state merges across micro-batches →
-    // memory sink; the per-user rollup runs in batch over the sink. Checked
+    // parquet sink; the per-user rollup runs in batch over the sink. Checked
     // against the identical oracle as w9 — streaming/batch equivalence for
     // stateful session windows, same contract as w10 for tumbling windows.
     "w11_stream_sessions" -> QueryDef(

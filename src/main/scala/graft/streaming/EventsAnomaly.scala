@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.util.UUID
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -14,13 +17,16 @@ import org.apache.spark.sql.types.StructType
   * Late-data policy: 1-hour watermark — state for an hour window is dropped
   * once the watermark passes, mirroring the batch gap rule (SURVEY §7.4.7).
   *
-  * Bounded replays (`replayBounded*`) run a transformation over a parquet
-  * file with Trigger.AvailableNow. Complete-mode replays ([[replayBounded]],
-  * [[replayBoundedLarge]]) skip the watermark-only micro-batch, which in
-  * complete mode re-emits an unchanged table; append-mode replays
-  * ([[replayBoundedAppend]], [[replayBoundedJoin]]) keep it, because it
-  * emits the windows the final watermark closes. [[replayBounded]] returns
-  * a local one-partition frame over its memory sink's rows.
+  * Bounded replays (`replayBounded*`) run a transformation over one parquet
+  * file as a stream, all through one bracket ([[run]]): Trigger.AvailableNow
+  * and a foreachBatch sink. [[replayBounded]] collects its complete-mode
+  * batch on the driver and returns a local one-partition frame;
+  * [[replayBoundedLarge]] overwrites parquet with each complete-mode batch,
+  * and the append-mode replays ([[replayBoundedAppend]],
+  * [[replayBoundedJoin]]) append each batch to parquet, all read back as a
+  * plain frame. Complete-mode replays skip the watermark-only micro-batch,
+  * which in complete mode re-emits an unchanged table; append-mode replays
+  * keep it, because it emits the windows the final watermark closes.
   */
 object EventsAnomaly {
 
@@ -110,7 +116,7 @@ object EventsAnomaly {
     * the watermark horizon. Under Hadoop's default checkpoint manager each
     * of those files also forked `chmod`/`readlink` processes: w14 at sf0.1
     * and 4 partitions spent 1.24 s of a warm replay in state commit, 0.06 s
-    * since [[withReplayConf]] installs [[NioCheckpointFileManager]]
+    * since [[run]] installs [[NioCheckpointFileManager]]
     * (perfbench fixpoint, traced, 4 cores). Measured on w15_stream_join at
     * sf0.1 with the default manager (40k join-state rows, warm rep):
     * 32 partitions = 204 s task time / 9.5 s wall; 16 = 44 s / 5.0 s;
@@ -145,23 +151,26 @@ object EventsAnomaly {
 
   private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-  /** Run `body` (a streaming start/await bracket) with the session's
-    * shuffle-partition conf pinned to [[streamShuffleParts]] and the
-    * checkpoint file manager set to [[NioCheckpointFileManager]], restoring
-    * the caller's values after, whether `body` returns or throws. A NEW
-    * streaming checkpoint pins its state partition count from this conf at
-    * first-batch planning, and a query reads its trigger confs from the
-    * session clone it takes at start, so the bracket only needs to span
-    * query start → termination; the batch rollups over the sink run at the
-    * session's normal width.
+  /** The one bounded-replay bracket. In order, it sizes the source with
+    * [[streamShuffleParts]] (so a sizing failure names the path before any
+    * schema inference), builds the frame, sets the replay confs, starts a
+    * `replay_<uuid>` query with Trigger.AvailableNow and the foreachBatch
+    * `sink` in complete or append mode, awaits it, and in a `finally`
+    * deletes the checkpoint and restores the caller's confs, whether the
+    * query returns or throws. Returns the frame's schema.
     *
-    * The manager key reaches only what the query creates: its checkpoint
-    * under /dev/shm or java.io.tmpdir, deleted when the replay ends, and
-    * a file sink's `_spark_metadata` log. Those files are written without
-    * Hadoop's `.crc` sidecars and without forking a process per file
-    * (Hadoop's default manager → this one, one warm w14 replay at sf0.1
-    * on 4 cores: ~260 forks → 0; state commit 1,240 → 61 ms, query
-    * planning 376 → 43 ms, WAL commit 131 → 3 ms). Spark's own state checksums still apply.
+    * The confs: `spark.sql.shuffle.partitions` is pinned to the sized
+    * count, because a NEW streaming checkpoint pins its state partition
+    * count from it at first-batch planning; a query reads its confs from
+    * the session clone it takes at start, so they only need to span start
+    * → termination, and the caller's batch work over the result runs at
+    * the session's normal width. The checkpoint file manager is
+    * [[NioCheckpointFileManager]], which reaches only the replay's own
+    * checkpoint: its files are written without Hadoop's `.crc` sidecars and
+    * without forking a process per file (Hadoop's default manager → this
+    * one, one warm w14 replay at sf0.1 on 4 cores: ~260 forks → 0; state
+    * commit 1,240 → 61 ms, query planning 376 → 43 ms, WAL commit 131 →
+    * 3 ms). Spark's own state checksums still apply.
     *
     * `complete` also turns off the no-data micro-batch. Spark runs one extra
     * batch with zero input once the watermark advances, to evict state and
@@ -171,212 +180,160 @@ object EventsAnomaly {
     * unchanged table: pure cost (w14 at sf0.1, 4 cores: 1.0–1.2 s of a
     * 3–4 s warm replay, traced with perfbench). Append-mode replays must
     * keep it: there it emits the windows the watermark closes, which no
-    * data batch of a bounded replay ever would. */
-  private def withReplayConf[T](spark: SparkSession, parquetPath: String,
-      complete: Boolean)(body: => T): T = {
+    * data batch of a bounded replay ever would.
+    *
+    * The checkpoint is RAM-backed when the host has /dev/shm, else under
+    * java.io.tmpdir. A replay is ephemeral by construction (bounded input,
+    * the checkpoint is discarded the moment the query terminates, and no
+    * replay ever restarts from it), so it needs none of the durability a
+    * production job's does, and RAM keeps its many small files off the
+    * disk: the round-8 anatomy (BASELINE.md "w10_stream_hourly: profiled
+    * anatomy", sf0.1, 32 state partitions) charged ~9 ms per state
+    * partition per batch to disk. For the same reason a foreachBatch sink
+    * loses nothing against a file sink here: its exactly-once log guards
+    * restarts, and task retries are still covered by the parquet commit
+    * protocol. Production jobs keep durable checkpoints; match durability
+    * to what the artifact needs. */
+  private def run(spark: SparkSession, parquetPath: String, complete: Boolean)(
+      build: => DataFrame)(sink: (Dataset[Row], Long) => Unit): StructType = {
+    val parts = streamShuffleParts(spark, parquetPath)
+    val df = build
     val confs = Seq(
-      "spark.sql.shuffle.partitions" -> streamShuffleParts(spark, parquetPath).toString,
+      "spark.sql.shuffle.partitions" -> parts.toString,
       NioCheckpointFileManager.ConfKey -> classOf[NioCheckpointFileManager].getName) ++
       (if (complete) Seq(NoDataBatchesKey -> "false") else Nil)
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    val ckpt = checkpointDir()
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      df.writeStream
+        .queryName("replay_" + UUID.randomUUID().toString.replace("-", ""))
+        .option("checkpointLocation", ckpt.getPath)
+        .outputMode(if (complete) "complete" else "append")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(sink)
+        .start()
+        .awaitTermination()
+    } finally {
+      deleteRecursively(ckpt)
+      prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    df.schema
   }
 
-  /** RAM-backed checkpoint dir for a bounded replay, when the host has one.
-    *
-    * A replay is ephemeral BY CONSTRUCTION — bounded input, the checkpoint
-    * is discarded the moment the query terminates — so its checkpoint
-    * needs none of the durability a production job's does, and RAM keeps
-    * its many small files off the disk. The round-8 anatomy (BASELINE.md
-    * "w10_stream_hourly: profiled anatomy", sf0.1, 32 state partitions)
-    * charged ~9 ms per state partition per batch to disk sync. Hadoop's
-    * local filesystem does not sync checkpoint files, and /dev/shm has
-    * nothing to sync; the per-file cost was the `chmod` and `readlink`
-    * processes Hadoop forks for every checkpoint file and `.crc` sidecar
-    * when no native libhadoop is loaded (~260 per warm w14 replay at sf0.1,
-    * 1.24 s of its state commit). [[withReplayConf]] removes them with
-    * [[NioCheckpointFileManager]]. Production jobs keep durable
-    * checkpoints; match durability to what the artifact needs. */
-  private def ephemeralCheckpoint(): Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      Some(new java.io.File(shm,
-        "graft-replay-" + java.util.UUID.randomUUID().toString).getPath)
-    else None
+  /** A fresh replay checkpoint dir: under /dev/shm when it is writable, else
+    * under java.io.tmpdir (see [[run]]). */
+  private def checkpointDir(): File = {
+    val shm = new File("/dev/shm")
+    val root = if (shm.isDirectory && shm.canWrite) shm else new File(sys.props("java.io.tmpdir"))
+    new File(root, "graft-replay-" + UUID.randomUUID())
   }
-
-  /** Like [[ephemeralCheckpoint]] but never absent — file sinks REQUIRE a
-    * checkpoint location, so fall back to the JVM temp dir off-shm. */
-  private def requiredCheckpoint(): String =
-    ephemeralCheckpoint().getOrElse(
-      new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-replay-" + java.util.UUID.randomUUID().toString).getPath)
 
   /** Per-replay parquet sink dir under the app's staging root (shutdown-
     * hook cleaned, same lifecycle as the staged indexes). */
   private def sinkDir(spark: SparkSession): String =
-    graft.ops.Staged.appRoot(spark) + "/replay-sink-" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    graft.ops.Staged.appRoot(spark) + "/replay-sink-" + UUID.randomUUID().toString.replace("-", "")
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private def deleteRecursively(f: File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRecursively)
     f.delete(); ()
   }
 
-  /** Read a replay sink dir back, tolerating the ZERO-OUTPUT case: an
-    * append-mode run whose rows are all held back by the final watermark
-    * (tiny corpus) or a zero-batch run commits no data files, and
-    * spark.read.parquet on a data-less dir throws a schema-inference error
-    * where the old memory sink returned an empty table WITH a schema.
-    * `schema` is the transform's output schema — the empty frame keeps the
-    * sink contract. */
-  private def readSinkOrEmpty(spark: SparkSession, out: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val files = new java.io.File(out).listFiles()
+  /** Read a replay sink dir back, tolerating the ZERO-OUTPUT case: a
+    * replay whose rows are all held back by the final watermark (tiny
+    * corpus) or that ran no batch commits no data files, and
+    * spark.read.parquet on a data-less dir throws a schema-inference error.
+    * `schema` is the transform's output schema, which the empty frame
+    * keeps. */
+  private def readSinkOrEmpty(spark: SparkSession, out: String, schema: StructType): DataFrame = {
+    val files = new File(out).listFiles()
     val hasData = files != null && files.exists(f =>
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
     if (hasData) spark.read.parquet(out)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
-  /** Start `dsw` with an ephemeral checkpoint (when available), await the
-    * bounded run, and clean the checkpoint up — shared tail of the
-    * complete-mode replays. */
-  private def runBounded(
-      dsw: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
-    val ckpt = ephemeralCheckpoint()
-    val q = ckpt.fold(dsw)(dsw.option("checkpointLocation", _)).start()
-    try q.awaitTermination()
-    finally ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
+  /** The bounded source: a file stream over the one parquet file. File-
+    * stream sources require a directory, so it streams the parent dir with
+    * a glob pinned to the file. Each call of the returned function is an
+    * independent stream; all share this one schema inference job. */
+  private def boundedSource(spark: SparkSession, parquetPath: String): () => DataFrame = {
+    val schema = spark.read.parquet(parquetPath).schema
+    val f = new File(parquetPath)
+    () => spark.readStream.schema(schema).option("pathGlobFilter", f.getName).parquet(f.getParent)
   }
 
-  /** The bounded source's schema: one inference job, which a two-sided
-    * replay shares between its sides. */
-  private def sourceSchema(spark: SparkSession, parquetPath: String): StructType =
-    spark.read.parquet(parquetPath).schema
-
-  private def boundedSource(spark: SparkSession, parquetPath: String,
-      schema: StructType): DataFrame = {
-    // File-stream sources require a directory: stream the parent dir with a
-    // glob pinned to the one file.
-    val f = new java.io.File(parquetPath)
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", f.getName)
-      .parquet(f.getParent)
+  /** A replay whose micro-batches the executors write to a fresh parquet
+    * dir, read back as a plain frame: a complete-mode batch is the whole
+    * result table and overwrites the dir, an append-mode batch adds its
+    * emitted rows. */
+  private def replayToParquet(spark: SparkSession, parquetPath: String, complete: Boolean)(
+      build: => DataFrame): DataFrame = {
+    val out = sinkDir(spark)
+    val mode = if (complete) "overwrite" else "append"
+    val schema = run(spark, parquetPath, complete)(build)((batch, _) => batch.write.mode(mode).parquet(out))
+    readSinkOrEmpty(spark, out, schema)
   }
 
-  private def boundedSource(spark: SparkSession, parquetPath: String): DataFrame =
-    boundedSource(spark, parquetPath, sourceSchema(spark, parquetPath))
-
-  /** Run a streaming transformation over a bounded parquet source with
-    * Trigger.AvailableNow and a memory sink, returning the final result —
-    * the replay harness that lets the correctness gate cover the streaming
-    * path with the same oracle as the batch query. Complete mode, so the
-    * watermark-only micro-batch is skipped (see [[withReplayConf]]).
+  /** Run a streaming transformation over a bounded parquet source in
+    * complete mode and return the final result: the replay harness that
+    * lets the correctness gate cover the streaming path with the same
+    * oracle as the batch query.
     *
-    * MEMORY SINK CONTRACT: only for transforms whose complete-mode output
+    * DRIVER-COLLECT CONTRACT: the one complete-mode batch is collected on
+    * the driver, so this is only for transforms whose complete-mode output
     * is aggregate-BOUNDED at any corpus size (hourly counts ≈ hours span,
-    * per-type rollups ≈ type cardinality). A data-proportional output
-    * through this sink is collected to the driver per micro-batch — the
-    * sf10 whale killed w11 exactly there (spark.driver.maxResultSize at
-    * 10M events). Data-proportional complete aggregates use
-    * [[replayBoundedLarge]]; data-proportional append emissions use the
-    * file-sink variants below.
+    * per-type rollups ≈ type cardinality). A data-proportional output here
+    * would funnel through the driver — the sf10 whale killed w11 exactly
+    * there (spark.driver.maxResultSize at 10M events, when this collect was
+    * a memory sink). Data-proportional complete aggregates use
+    * [[replayBoundedLarge]]; data-proportional append emissions use
+    * [[replayBoundedAppend]] / [[replayBoundedJoin]].
     *
-    * The result is a LOCAL frame: the sink's rows, which the memory sink
-    * already holds in this JVM under the contract above, with its schema
-    * (nullability included), in one partition. A caller's rollup over it
-    * is then one job with no exchange (w14 at sf0.1: 3 jobs → 1, warm
-    * rollup 0.12–0.19 s → 0.04–0.05 s), and the sink's temp view is
-    * dropped instead of living for the whole session. */
+    * The result is a LOCAL frame over the collected rows, with the
+    * transform's schema (nullability included), in one partition. A
+    * caller's rollup over it is then one job with no exchange (w14 at
+    * sf0.1: 3 jobs → 1, warm rollup 0.12–0.19 s → 0.04–0.05 s). */
   def replayBounded(spark: SparkSession, parquetPath: String,
       transform: DataFrame => DataFrame): DataFrame = {
-    val name = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      withReplayConf(spark, parquetPath, complete = true) {
-        runBounded(transform(boundedSource(spark, parquetPath)).writeStream
-          .format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow()))
-      }
-      val sink = spark.table(name)
-      spark.createDataFrame(java.util.Arrays.asList(sink.collect(): _*), sink.schema)
-        .coalesce(1)
-    } finally spark.catalog.dropTempView(name)
+    var rows = Array.empty[Row]
+    val schema = run(spark, parquetPath, complete = true)(
+      transform(boundedSource(spark, parquetPath)()))((batch, _) => rows = batch.collect())
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
   }
 
   /** Complete-mode replay for DATA-PROPORTIONAL aggregates (session
-    * windows): each micro-batch's complete result table is written to
-    * parquet by the EXECUTORS (foreachBatch overwrite — the streaming
-    * equivalent of maintaining a sink table), so no row ever funnels
-    * through the driver; the last batch's overwrite is the final state.
-    * Complete mode is what keeps bounded-replay parity with the batch
-    * oracle — in append mode the sessions still inside the final watermark
-    * horizon would stay in state and never emit — and, as in
-    * [[replayBounded]], it skips the watermark-only micro-batch. */
+    * windows): each micro-batch's complete result table is overwritten to
+    * parquet by the EXECUTORS (the streaming equivalent of maintaining a
+    * sink table), so no row ever funnels through the driver; the last
+    * batch's overwrite is the final state. Complete mode is what keeps
+    * bounded-replay parity with the batch oracle — in append mode the
+    * sessions still inside the final watermark horizon would stay in state
+    * and never emit. */
   def replayBoundedLarge(spark: SparkSession, parquetPath: String,
-      transform: DataFrame => DataFrame): DataFrame = {
-    val out = sinkDir(spark)
-    val write: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => batch.write.mode("overwrite").parquet(out)
-    val transformed = transform(boundedSource(spark, parquetPath))
-    withReplayConf(spark, parquetPath, complete = true) {
-      runBounded(transformed.writeStream
-        .outputMode("complete")
-        .foreachBatch(write)
-        .trigger(Trigger.AvailableNow()))
-    }
-    readSinkOrEmpty(spark, out, transformed.schema)
-  }
-
-  /** Shared tail of the append-mode replays: a real parquet FILE sink (the
-    * production shape for data-proportional emissions — join pairs and
-    * per-event state outputs scale with the corpus, so a driver-side memory
-    * sink is a maxResultSize OOM waiting for scale). Executors append
-    * finished rows to the sink directory; the result is read back as a
-    * plain parquet frame. File sinks require a checkpoint, so this variant
-    * always has one. Append mode keeps the watermark-only micro-batch: it
-    * is the batch that emits the windows the final watermark closes. */
-  private def runBoundedToFiles(spark: SparkSession, df: DataFrame,
-      parquetPath: String): DataFrame = {
-    val out = sinkDir(spark)
-    val ckpt = requiredCheckpoint()
-    withReplayConf(spark, parquetPath, complete = false) {
-      val q = df.writeStream
-        .format("parquet").option("path", out)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally deleteRecursively(new java.io.File(ckpt))
-    }
-    readSinkOrEmpty(spark, out, df.schema)
-  }
+      transform: DataFrame => DataFrame): DataFrame =
+    replayToParquet(spark, parquetPath, complete = true)(transform(boundedSource(spark, parquetPath)()))
 
   /** Two-source APPEND-mode replay for stream-stream joins: each side gets
-    * its own file-stream instance over the same bounded source (two
-    * independent streams, as production would have two topics), sharing one
-    * schema inference; the join's emitted rows accumulate in the file sink.
-    * Complete mode is aggregation-only in Spark, so joins need this append
-    * variant. */
+    * its own file stream over the same bounded source (two independent
+    * streams, as production would have two topics), sharing one schema
+    * inference. The executors append the join's emitted rows to parquet
+    * per micro-batch, since join pairs scale with the corpus, and the
+    * result is read back as a plain parquet frame. Complete mode is
+    * aggregation-only in Spark, so joins need this append variant. */
   def replayBoundedJoin(spark: SparkSession, parquetPath: String,
-      transform: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val schema = sourceSchema(spark, parquetPath)
-    runBoundedToFiles(spark,
-      transform(boundedSource(spark, parquetPath, schema),
-        boundedSource(spark, parquetPath, schema)),
-      parquetPath)
-  }
+      transform: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    replayToParquet(spark, parquetPath, complete = false) {
+      val source = boundedSource(spark, parquetPath)
+      transform(source(), source())
+    }
 
   /** Single-source APPEND-mode replay: for stateful operators that emit
     * rows incrementally (flatMapGroupsWithState) rather than maintaining a
-    * complete aggregate. */
+    * complete aggregate. Emitted rows are appended to parquet per
+    * micro-batch and read back, as in [[replayBoundedJoin]]. */
   def replayBoundedAppend(spark: SparkSession, parquetPath: String,
       transform: DataFrame => DataFrame): DataFrame =
-    runBoundedToFiles(spark, transform(boundedSource(spark, parquetPath)), parquetPath)
+    replayToParquet(spark, parquetPath, complete = false)(transform(boundedSource(spark, parquetPath)()))
 }

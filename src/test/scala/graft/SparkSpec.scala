@@ -31,33 +31,52 @@ trait SparkSpec extends AnyFunSuite {
     finally previous.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** Number of Spark jobs `body` starts, counted by job group. Listener
-    * events arrive asynchronously but in order, so a marker job run after
-    * `body` bounds the count: once the listener has seen the marker, it has
-    * seen every job `body` started. */
-  def jobsStartedBy(body: => Any): Int = {
+  /** Number of Spark jobs `body` starts on the calling thread, counted by
+    * job group. */
+  def jobsStartedBy(body: => Any): Int = jobCounts(body).caller
+
+  /** Spark jobs `body` starts: `caller` on the calling thread, counted by job
+    * group, and `streams` in the micro-batches of the streaming queries it
+    * starts. A stream runs its batches on its own thread under its run id as
+    * job group; `onQueryStarted` is delivered inside `start()`, before the
+    * stream's first job, so the run id is known when its jobs arrive.
+    * Listener events arrive asynchronously but in order, so a marker job run
+    * after `body` bounds both counts: once the listener has seen the marker,
+    * it has seen every job `body` started. */
+  def jobCounts(body: => Any): Jobs = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
     val group = s"jobs-${java.util.UUID.randomUUID}"
     val marker = s"$group-marker"
-    val started = new AtomicInteger
+    val runs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]
+    val caller, streams = new AtomicInteger
     val markerSeen = new CountDownLatch(1)
+    val queries = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = { runs.add(e.runId.toString); () }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => started.incrementAndGet()
+          case `group` => caller.incrementAndGet()
           case `marker` => markerSeen.countDown()
+          case g if g != null && runs.contains(g) => streams.incrementAndGet()
           case _ => ()
         }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
+    spark.streams.addListener(queries)
     try {
       sc.setJobGroup(group, group)
       try body finally sc.setJobGroup(marker, marker)
       sc.parallelize(Seq(1), 1).count()
       assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-      started.get
+      Jobs(caller.get, streams.get)
     } finally {
       sc.clearJobGroup()
+      spark.streams.removeListener(queries)
       sc.removeSparkListener(listener)
     }
   }
@@ -80,3 +99,6 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 }
+
+/** Jobs counted by [[SparkSpec.jobCounts]]. */
+final case class Jobs(caller: Int, streams: Int)

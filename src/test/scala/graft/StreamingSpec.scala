@@ -5,12 +5,13 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.streaming.{EventsAnomaly, NioCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 class StreamingSpec extends SparkSpec {
 
-  private def runToMemory(df: org.apache.spark.sql.DataFrame, name: String,
+  private def runToMemory(df: DataFrame, name: String,
       mode: String = "complete"): Unit = {
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()
@@ -98,12 +99,12 @@ class StreamingSpec extends SparkSpec {
   private val dupEvents = Seq((1L, "click", 10L), (1L, "click", 20L), (2L, "click", 3700L),
     (3L, "view", 3800L), (3L, "view", 3900L), (4L, "view", 5 * 3600L), (5L, "click", 5 * 3600L + 9))
 
-  private def dedupCounts(src: org.apache.spark.sql.DataFrame) =
+  private def dedupCounts(src: DataFrame) =
     EventsAnomaly.dedupStream(src, Seq("event_id"))
       .groupBy("event_type").agg(count(lit(1)).as("n"))
 
   /** Micro-batch progress events of each replay query `body` starts
-    * (memory-sink replays are named `replay_*`). The started event is
+    * (bounded replays are named `replay_*`). The started event is
     * delivered inside start(); the rest arrive asynchronously, progress
     * before termination, so waiting for every termination bounds the
     * count. */
@@ -177,6 +178,24 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** Every bounded-replay entry point, each running a transform over `f`
+    * applied to its source(s): a dedup rollup in complete mode, hourly
+    * counts in append mode, and an interval self-join. */
+  private val entryPoints: Seq[(String, (String, DataFrame => DataFrame) => DataFrame)] = Seq(
+    "replayBounded" -> ((path, f) => EventsAnomaly.replayBounded(spark, path, s => dedupCounts(f(s)))),
+    "replayBoundedLarge" ->
+      ((path, f) => EventsAnomaly.replayBoundedLarge(spark, path, s => dedupCounts(f(s)))),
+    "replayBoundedAppend" ->
+      ((path, f) => EventsAnomaly.replayBoundedAppend(spark, path, s => EventsAnomaly.hourlyCounts(f(s)))),
+    "replayBoundedJoin" -> ((path, f) => EventsAnomaly.replayBoundedJoin(spark, path, (a, b) => {
+      val l = f(a).withWatermark("ts", "1 hour").select(col("event_id").as("l_id"), col("ts").as("l_ts"))
+      val r = f(b).withWatermark("ts", "1 hour").select(col("event_id").as("r_id"), col("ts").as("r_ts"))
+      l.join(r, expr("l_id = r_id AND r_ts BETWEEN l_ts - INTERVAL 1 HOUR AND l_ts"))
+    })))
+
+  private def replayViews: Set[String] =
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("replay_")).toSet
+
   test("a replay restores shuffle partitions and the no-data batch conf, also when its query throws") {
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.streaming.noDataMicroBatches.enabled", NioCheckpointFileManager.ConfKey)
@@ -186,18 +205,16 @@ class StreamingSpec extends SparkSpec {
         classOf[FileContextBasedCheckpointFileManager].getName) {
       val before = confs
       withEventsFile(dupEvents) { path =>
-        EventsAnomaly.replayBounded(spark, path, dedupCounts).collect()
-        assert(confs === before)
-        EventsAnomaly.replayBoundedAppend(spark, path, s => EventsAnomaly.hourlyCounts(s))
-        assert(confs === before)
-        // A throwing replay leaves no sink view behind either.
-        val views = spark.catalog.listTables().collect().map(_.name).toSet
-        val e = intercept[Exception](EventsAnomaly.replayBounded(spark, path,
-          s => s.groupBy(boom(col("event_id")).as("k")).count()))
-        assert(spark.catalog.listTables().collect().map(_.name).toSet === views)
-        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-          .exists(t => Option(t.getMessage).exists(_.contains("boom"))))
-        assert(confs === before)
+        entryPoints.foreach { case (name, replay) =>
+          replay(path, identity).collect()
+          assert(confs === before, name)
+          val e = intercept[Exception](replay(path, _.filter(boom(col("event_id")) >= 0)).collect())
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(t => Option(t.getMessage).exists(_.contains("boom"))), name)
+          assert(confs === before, name)
+          // No replay leaves a temp view behind, whether it returns or throws.
+          assert(replayViews === Set.empty[String], name)
+        }
       }
     }))
   }
@@ -207,15 +224,16 @@ class StreamingSpec extends SparkSpec {
     // when no native libhadoop is loaded; NioCheckpointFileManager forks
     // none. The probe process shows the recording sees forks at all.
     withEventsFile(dupEvents) { path =>
-      val commands = processesStartedDuring {
-        EventsAnomaly.replayBounded(spark, path, dedupCounts).collect()
-        EventsAnomaly.replayBoundedAppend(spark, path, s => EventsAnomaly.hourlyCounts(s)).collect()
-        new ProcessBuilder("true", "graft-fork-probe").start().waitFor()
+      entryPoints.foreach { case (name, replay) =>
+        val commands = processesStartedDuring {
+          replay(path, identity).collect()
+          new ProcessBuilder("true", "graft-fork-probe").start().waitFor()
+        }
+        assert(commands.exists(_.contains("graft-fork-probe")), name)
+        val underCheckpoints = commands.filter(_.contains("graft-replay-"))
+        assert(underCheckpoints.size === 0,
+          s"$name: of ${commands.size} processes, e.g. ${underCheckpoints.take(3).mkString("; ")}")
       }
-      assert(commands.exists(_.contains("graft-fork-probe")))
-      val underCheckpoints = commands.filter(_.contains("graft-replay-"))
-      assert(underCheckpoints.size === 0,
-        s"of ${commands.size} processes, e.g. ${underCheckpoints.take(3).mkString("; ")}")
     }
   }
 
@@ -249,8 +267,9 @@ class StreamingSpec extends SparkSpec {
     // silently size a remote stream at the 4-partition state floor.
     val missing = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft-missing-${java.util.UUID.randomUUID()}/events.parquet").getPath
-    val e = intercept[java.io.IOException](
-      EventsAnomaly.replayBounded(spark, missing, s => EventsAnomaly.hourlyCounts(s)))
-    assert(e.getMessage.contains(missing))
+    entryPoints.foreach { case (name, replay) =>
+      val e = intercept[java.io.IOException](replay(missing, identity))
+      assert(e.getMessage.contains(missing), name)
+    }
   }
 }
