@@ -134,6 +134,10 @@ object GraftSession {
       // Connect, so it protects nothing here. Only settable when a session
       // is created.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Local Hadoop writes (parquet, staged intermediates, RDD and
+      // streaming checkpoints) set file permissions through java.nio
+      // instead of forking one `chmod` per file (see NioLocalFileSystem).
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   def local(cores: Int = 4): SparkSession = {
     val spark = builder(cores).getOrCreate()

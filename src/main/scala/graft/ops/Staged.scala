@@ -22,11 +22,13 @@ object Staged {
   // application run leaks its parquet stages to the machine's tmp dir.
   private val roots = scala.collection.concurrent.TrieMap.empty[String, Unit]
   private lazy val hookInstalled: Unit =
-    sys.addShutdownHook(roots.keys.foreach(deleteRecursively))
+    sys.addShutdownHook(roots.keys.foreach(r => deleteRecursively(new java.io.File(r))))
 
-  private def deleteRecursively(path: String): Unit = {
-    val f = new java.io.File(path)
-    if (f.isDirectory) f.listFiles().foreach(c => deleteRecursively(c.getPath))
+  /** Deletes `f` and everything under it in-process; a missing path is a
+    * no-op. Spark's `Utils.deleteRecursively` forks `rm -rf` for a
+    * directory on Unix. */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }
 

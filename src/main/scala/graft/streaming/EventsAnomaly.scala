@@ -4,6 +4,7 @@ import java.io.File
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -113,16 +114,11 @@ object EventsAnomaly {
     * (store open, commit and maintenance, each writing its own delta,
     * checksum and log files, and at high thread counts a measured
     * super-linear contention term), while the state itself is bounded by
-    * the watermark horizon. Under Hadoop's default checkpoint manager each
-    * of those files also forked `chmod`/`readlink` processes: w14 at sf0.1
-    * and 4 partitions spent 1.24 s of a warm replay in state commit, 0.06 s
-    * since [[run]] installs [[NioCheckpointFileManager]]
-    * (perfbench fixpoint, traced, 4 cores). Measured on w15_stream_join at
-    * sf0.1 with the default manager (40k join-state rows, warm rep):
-    * 32 partitions = 204 s task time / 9.5 s wall; 16 = 44 s / 5.0 s;
-    * 4 = 3.6 s / 2.9 s — the per-task cost itself GROWS with the partition
-    * count (6.4 s → 0.9 s), so inheriting local[32]'s default was pure overhead at this state
-    * size. The rule sizes partitions at one per ~32 MB of source bytes
+    * the watermark horizon. On w15_stream_join at sf0.1 (OPTIMIZATION_r14.md,
+    * 40k join-state rows) task time and wall both fell from 32 partitions
+    * to 16 to 4, and the per-task cost itself grew with the count, so
+    * inheriting local[32]'s default was pure overhead at this state size.
+    * The rule sizes partitions at one per ~32 MB of source bytes
     * (clamped to [4, 1024]) — sf0.1's ~4 MB stream runs at 4 and a
     * terabyte-scale stream derives hundreds. Results are
     * partition-count-independent (hash routing only), which the 6
@@ -150,6 +146,7 @@ object EventsAnomaly {
   }
 
   private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** The one bounded-replay bracket. In order, it sizes the source with
     * [[streamShuffleParts]] (so a sizing failure names the path before any
@@ -164,43 +161,43 @@ object EventsAnomaly {
     * count from it at first-batch planning; a query reads its confs from
     * the session clone it takes at start, so they only need to span start
     * → termination, and the caller's batch work over the result runs at
-    * the session's normal width. The checkpoint file manager is
-    * [[NioCheckpointFileManager]], which reaches only the replay's own
-    * checkpoint: its files are written without Hadoop's `.crc` sidecars and
-    * without forking a process per file (Hadoop's default manager → this
-    * one, one warm w14 replay at sf0.1 on 4 cores: ~260 forks → 0; state
-    * commit 1,240 → 61 ms, query planning 376 → 43 ms, WAL commit 131 →
-    * 3 ms). Spark's own state checksums still apply.
+    * the session's normal width. The checkpoint file manager is Spark's
+    * FileSystem-based one, so the checkpoint goes through the session's
+    * `file:` filesystem ([[graft.core.NioLocalFileSystem]]): `.crc`
+    * sidecars are written and no file forks a `chmod`. Spark's default
+    * manager for `file:` goes through Hadoop's FileContext, whose local
+    * filesystem is a hard-wired RawLocalFileSystem and whose rename forks
+    * `readlink`. A warm w14 replay at sf0.1 on 4 cores spends 67–83 ms in
+    * state commit this way, `.crc` sidecars included (perfbench fixpoint,
+    * traced).
     *
     * `complete` also turns off the no-data micro-batch. Spark runs one extra
     * batch with zero input once the watermark advances, to evict state and
     * emit what the watermark closed. In complete mode an aggregate keeps all
     * of its state and re-emits its whole table every batch, so that batch
     * can only evict upstream state (w14's dedup ids) and re-emit an
-    * unchanged table: pure cost (w14 at sf0.1, 4 cores: 1.0–1.2 s of a
-    * 3–4 s warm replay, traced with perfbench). Append-mode replays must
-    * keep it: there it emits the windows the watermark closes, which no
-    * data batch of a bounded replay ever would.
+    * unchanged table: pure cost (CHANGES.md has the traced w14 figures).
+    * Append-mode replays must keep it: there it emits the windows the
+    * watermark closes, which no data batch of a bounded replay ever would.
     *
     * The checkpoint is RAM-backed when the host has /dev/shm, else under
     * java.io.tmpdir. A replay is ephemeral by construction (bounded input,
     * the checkpoint is discarded the moment the query terminates, and no
     * replay ever restarts from it), so it needs none of the durability a
     * production job's does, and RAM keeps its many small files off the
-    * disk: the round-8 anatomy (BASELINE.md "w10_stream_hourly: profiled
-    * anatomy", sf0.1, 32 state partitions) charged ~9 ms per state
-    * partition per batch to disk. For the same reason a foreachBatch sink
-    * loses nothing against a file sink here: its exactly-once log guards
-    * restarts, and task retries are still covered by the parquet commit
-    * protocol. Production jobs keep durable checkpoints; match durability
-    * to what the artifact needs. */
+    * disk (BASELINE.md "w10_stream_hourly: profiled anatomy" charges the
+    * disk a fixed cost per state partition per batch). For the same reason
+    * a foreachBatch sink loses nothing against a file sink here: its
+    * exactly-once log guards restarts, and task retries are still covered
+    * by the parquet commit protocol. Production jobs keep durable
+    * checkpoints; match durability to what the artifact needs. */
   private def run(spark: SparkSession, parquetPath: String, complete: Boolean)(
       build: => DataFrame)(sink: (Dataset[Row], Long) => Unit): StructType = {
     val parts = streamShuffleParts(spark, parquetPath)
     val df = build
     val confs = Seq(
       "spark.sql.shuffle.partitions" -> parts.toString,
-      NioCheckpointFileManager.ConfKey -> classOf[NioCheckpointFileManager].getName) ++
+      CheckpointManagerKey -> classOf[FileSystemBasedCheckpointFileManager].getName) ++
       (if (complete) Seq(NoDataBatchesKey -> "false") else Nil)
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     val ckpt = checkpointDir()
@@ -215,7 +212,7 @@ object EventsAnomaly {
         .start()
         .awaitTermination()
     } finally {
-      deleteRecursively(ckpt)
+      graft.ops.Staged.deleteRecursively(ckpt)
       prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
     df.schema
@@ -233,12 +230,6 @@ object EventsAnomaly {
     * hook cleaned, same lifecycle as the staged indexes). */
   private def sinkDir(spark: SparkSession): String =
     graft.ops.Staged.appRoot(spark) + "/replay-sink-" + UUID.randomUUID().toString.replace("-", "")
-
-  private def deleteRecursively(f: File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(); ()
-  }
 
   /** Read a replay sink dir back, tolerating the ZERO-OUTPUT case: a
     * replay whose rows are all held back by the final watermark (tiny

@@ -3,7 +3,9 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import graft.core.Materialize
 import graft.graph.GraphOps
+import graft.ops.Staged
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -70,5 +72,25 @@ class CheckpointModeSpec extends SparkSpec {
         spark.sparkContext.setCheckpointDir(null)
       }
     }
+  }
+
+  // Without a native libhadoop, Hadoop's local filesystem forks one chmod
+  // per file, .crc sidecar and directory it creates; the session's
+  // NioLocalFileSystem forks none.
+  test("a reliable-mode Materialize.cut starts no chmod, readlink or ls process") {
+    val dir = Files.createTempDirectory("graft-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(dir.getPath)
+    try {
+      val forks = unexpectedForks(Materialize.cut(pairs.repartition(3)).count())
+      assert(filesUnder(dir) > 0, "no reliable checkpoint files written")
+      assert(forks === Seq.empty[String])
+    } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("an ops.Staged write starts no chmod, readlink or ls process") {
+    val key = s"fork-census-${java.util.UUID.randomUUID()}"
+    val forks = unexpectedForks(Staged(spark, key)(pairs.repartition(3)))
+    assert(forks === Seq.empty[String])
+    assert(sorted(Staged(spark, key)(sys.error("staged twice"))) === sorted(pairs))
   }
 }

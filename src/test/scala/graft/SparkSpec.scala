@@ -98,6 +98,26 @@ trait SparkSpec extends AnyFunSuite {
       java.nio.file.Files.deleteIfExists(dump)
     }
   }
+
+  /** The processes `body` starts, minus two that Spark forks whatever the
+    * filesystem: `rm -rf` of a session artifact dir
+    * (`<tmp>/artifacts-<uuid>/...`), which a streaming query's cloned session
+    * forks asynchronously on stop, and the `getconf PAGESIZE` its executor
+    * metrics fork once per JVM at the first heartbeat. A probe process
+    * started after `body` must show up, so an empty result means the
+    * recording saw forks and found no other. */
+  def unexpectedForks(body: => Any): Seq[String] = {
+    val commands = processesStartedDuring {
+      body
+      new ProcessBuilder("true", "graft-fork-probe").start().waitFor()
+    }
+    assert(commands.exists(_.contains("graft-fork-probe")), "the recording saw no probe process")
+    commands.filterNot(c => c.contains("graft-fork-probe") || SparkSpec.SparkHousekeeping.matches(c))
+  }
+}
+
+object SparkSpec {
+  private val SparkHousekeeping = """rm -rf \S*/artifacts-[0-9a-f-]+(/\S*)?|getconf PAGESIZE""".r
 }
 
 /** Jobs counted by [[SparkSpec.jobCounts]]. */
