@@ -43,6 +43,10 @@ object GraftSession {
     * harness + small-corpus iterative escape hatch, BASELINE.md round 9). */
   private lazy val offHeapGb: Int = intEnv("SPARK_GRAFT_OFFHEAP_GB", 16, 0, "GB count")
 
+  /** Generated classes the codegen cache holds (see [[builder]] for how it
+    * was sized). */
+  private[graft] val CodegenCacheEntries = 8192
+
   def builder(cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
@@ -134,6 +138,15 @@ object GraftSession {
       // Connect, so it protects nothing here. Only settable when a session
       // is created.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Generated-class cache size. Spark's default of 100 entries is far
+      // below what the suite compiles: Bench's warm-up plus one cold pass
+      // of all 196 queries compiles 2,620 distinct classes (sf0.1,
+      // local[4]), so with 100 every later pass recompiled ~3,900 of them.
+      // 8192 holds the whole suite with room for other core counts' plans;
+      // at that size 3 Bench reps ended with ~235 MB of metaspace against
+      // ~212 MB at 100 (BASELINE.md, "Warm-session setup"). Static: the
+      // cache is sized once per JVM, when codegen is first used.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Local Hadoop writes (parquet, staged intermediates, RDD and
       // streaming checkpoints) set file permissions through java.nio
       // instead of forking one `chmod` per file (see NioLocalFileSystem).

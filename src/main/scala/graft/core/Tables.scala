@@ -1,7 +1,9 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table registry over the driver-provided parquet testdata.
   *
@@ -17,8 +19,61 @@ object Tables {
   /** Raw parquet scan. Column pruning + predicate pushdown reach the scan
     * because nothing here forces materialization. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEvents(df) else df
+  }
+
+  /** Inference confs read by the parquet schema inference: nanosAsLong maps
+    * TIMESTAMP(NANOS) to bigint, binaryAsString and int96AsTimestamp retype
+    * BINARY and INT96 columns, inferTimestampNTZ picks TIMESTAMP_NTZ over
+    * TIMESTAMP for non-UTC-adjusted timestamps, and mergeSchema decides
+    * whether a directory's footers are merged or one is trusted. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** (qualified path, inference confs) -> (file version, inferred schema). */
+  private val schemas = scala.collection.concurrent.TrieMap
+    .empty[(String, Seq[String]), (Seq[(String, Long, Long)], StructType)]
+
+  /** A parquet read whose schema is inferred once per file version.
+    *
+    * `spark.read.parquet` infers the schema with a Spark job
+    * (`mergeSchemasInParallel`) on every call, even for one file, so a warm
+    * query paid one scheduler round-trip per table before its own execution
+    * started. Here the inferred schema is cached, and every call reads with
+    * `spark.read.schema(s).parquet(path)`: each call still returns a fresh
+    * relation with new expression ids, and the schema is the one inference
+    * gave, nullability and field metadata included.
+    *
+    * The cache is keyed on:
+    *  - the qualified path, so a relative and an absolute spelling of one
+    *    file share an entry and equal paths on two filesystems do not;
+    *  - the Hadoop FileStatus length and modification time (of every file
+    *    under it, for a directory), so a file rewritten in place is
+    *    inferred again; an entry is replaced, not added, when they change;
+    *  - the session's [[inferenceConfs]] values, because they change the
+    *    inferred column types. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    val status = fs.getFileStatus(qualified)
+    val version =
+      if (!status.isDirectory) Seq((qualified.toString, status.getLen, status.getModificationTime))
+      else {
+        val files = fs.listFiles(qualified, true)
+        Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+      }
+    val key = (qualified.toString, inferenceConfs.map(spark.conf.get))
+    val schema = schemas.get(key).collect { case (`version`, s) => s }.getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemas.put(key, (version, s))
+      s
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   /** The engine's canonical event-time is `ts_ns`: int64 nanoseconds since

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-staged shared intermediates.
   *
@@ -15,8 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Staged {
 
+  // (application, key) -> (stage path, its schema as parquet inference
+  // reads it back). Each consumer reads with the kept schema, so only the
+  // write runs an inference job, not every re-read.
   private val cache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    scala.collection.concurrent.TrieMap.empty[String, (String, StructType)]
 
   // Stage roots created by this JVM, deleted on exit: without the hook every
   // application run leaks its parquet stages to the machine's tmp dir.
@@ -50,7 +54,7 @@ object Staged {
     // TrieMap.getOrElseUpdate may race two builders onto the same path; the
     // coarse lock is fine — each stage builds exactly once per app, and a
     // concurrent duplicate build would corrupt the directory under a reader.
-    val path = cache.synchronized {
+    val (path, schema) = cache.synchronized {
       cache.getOrElseUpdate(k, {
         // md5 of the full key: a 32-bit hashCode collision would silently
         // alias two different stages onto one directory.
@@ -59,9 +63,9 @@ object Staged {
         val p = s"${appRoot(s)}/stage-$digest"
         build.write.mode("overwrite").parquet(p)
         afterWrite()
-        p
+        (p, s.read.parquet(p).schema)
       })
     }
-    s.read.parquet(path)
+    s.read.schema(schema).parquet(path)
   }
 }

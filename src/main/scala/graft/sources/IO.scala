@@ -53,7 +53,7 @@ object IO {
       if (path.endsWith(".csv")) readCsv(spark, path)
       else if (path.endsWith(".json") || path.endsWith(".jsonl")) readJsonLines(spark, path)
       else if (path.endsWith(".orc")) readOrc(spark, path)
-      else spark.read.parquet(path)
+      else graft.core.Tables.parquet(spark, path)
     val latCol = base.columns.find(c => c.toLowerCase.matches("lat(itude)?"))
     val lonCol = base.columns.find(c => c.toLowerCase.matches("lon(gitude)?|lng"))
     (latCol, lonCol) match {

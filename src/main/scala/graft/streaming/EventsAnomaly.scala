@@ -235,22 +235,24 @@ object EventsAnomaly {
     * replay whose rows are all held back by the final watermark (tiny
     * corpus) or that ran no batch commits no data files, and
     * spark.read.parquet on a data-less dir throws a schema-inference error.
-    * `schema` is the transform's output schema, which the empty frame
-    * keeps. */
+    * `schema` is the transform's output schema: the sink's files were
+    * written with it, so a non-empty sink is read with it too, without an
+    * inference job, and the empty frame keeps it. */
   private def readSinkOrEmpty(spark: SparkSession, out: String, schema: StructType): DataFrame = {
     val files = new File(out).listFiles()
     val hasData = files != null && files.exists(f =>
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    if (hasData) spark.read.parquet(out)
+    if (hasData) spark.read.schema(schema).parquet(out)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
   /** The bounded source: a file stream over the one parquet file. File-
     * stream sources require a directory, so it streams the parent dir with
     * a glob pinned to the file. Each call of the returned function is an
-    * independent stream; all share this one schema inference job. */
+    * independent stream; all share one schema, which
+    * [[graft.core.Tables.parquet]] infers once per file version. */
   private def boundedSource(spark: SparkSession, parquetPath: String): () => DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = graft.core.Tables.parquet(spark, parquetPath).schema
     val f = new File(parquetPath)
     () => spark.readStream.schema(schema).option("pathGlobFilter", f.getName).parquet(f.getParent)
   }
