@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.functions.{StProjectUtm, StUnprojectUtm}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo, IntegerLiteral}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** SQL surface for the engine's custom Catalyst expressions:
   * `st_project_utm(lon, lat[, zone])` / `st_unproject_utm(e, n[, zone])`.
-  * Registered either into a live session (register) or via the
-  * `spark.sql.extensions` mechanism ([[GraftExtensions]]).
+  * Installed into every session [[GraftSession.builder]] builds, through
+  * [[GraftExtensions]].
   */
 object GraftFunctions {
 
@@ -108,18 +108,14 @@ object GraftFunctions {
     (FunctionIdentifier("bloom_might_contain"),
       info("bloom_might_contain", "probe a bloom_build sketch with an xxhash64 key"),
       buildBloomMightContain))
-
-  /** Register into an existing session's function registry. */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (id, fi, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, fi, builder)
-    }
 }
 
-/** `spark.sql.extensions=graft.core.GraftExtensions` injection point. */
+/** The engine's one session plug point, installed by [[GraftSession.builder]]
+  * as `spark.sql.extensions`: the SQL functions above and the
+  * [[SingleTaskSort]] AQE runtime rule. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.functions.foreach { case (id, fi, builder) =>
-      ext.injectFunction((id, fi, builder))
-    }
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftFunctions.functions.foreach(ext.injectFunction)
+    ext.injectRuntimeOptimizerRule(_ => SingleTaskSort)
+  }
 }

@@ -151,11 +151,13 @@ object GraftSession {
       // streaming checkpoints) set file permissions through java.nio
       // instead of forking one `chmod` per file (see NioLocalFileSystem).
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      // The engine's SQL functions and its AQE runtime rule (SingleTaskSort),
+      // injected into this session and every session cloned from it.
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
 
   def local(cores: Int = 4): SparkSession = {
     val spark = builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
     spark
   }
 

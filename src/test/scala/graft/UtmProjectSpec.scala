@@ -46,7 +46,6 @@ class UtmProjectSpec extends SparkSpec {
   }
 
   test("SQL registration: st_project_utm / st_unproject_utm round-trip in SQL") {
-    graft.core.GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT st_unproject_utm(en[0], en[1])[0] AS lon, st_unproject_utm(en[0], en[1])[1] AS lat
         |FROM (SELECT st_project_utm(-74.0060, 40.7128) AS en)""".stripMargin).head()
