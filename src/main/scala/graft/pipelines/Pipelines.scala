@@ -64,7 +64,7 @@ object Pipelines {
     // Oracle-checkable verdict row (round-7 promotion from no_oracle, the
     // m12 pattern): exact split sizes the oracle recomputes from the hash
     // split + in-engine fit-quality booleans against MlBands' relative
-    // bands. Raw metric values remain visible via graft.Lab2Eval.
+    // bands. Raw metric values remain visible via graft.GbtBandProbe.
     pred.withColumn("err", col("prediction") - col("y"))
       .agg(count(lit(1)).as("n_valid"),
         avg(abs(col("err"))).as("mae"),

@@ -366,7 +366,7 @@ object MLModelQueries extends QueryCatalog {
     // hash-mismatches. Bands are RELATIVE to the validation target mean so
     // they transfer across scale factors; calibration values and ceilings
     // live in ml.MlBands (re-pin via graft.GbtBandProbe). Raw metric values
-    // stay visible via GbtBandProbe + Lab2Eval + MlLibPipelineSpec.
+    // stay visible via GbtBandProbe + MlLibPipelineSpec.
     "m12_gbt_metrics" -> QueryDef(
       (s, dir) => {
         // Target = net revenue, a nonlinear function of the features — the

@@ -76,12 +76,12 @@ object MediaQueries extends QueryCatalog {
              |FROM feat GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // MM3 — REAL compressed-image decode, oracle-proven: deterministic
-    // pixels render per media id, PNG-encode (DEFLATE + varying row
-    // filters), then decode through the real codec path; the aggregate sums
-    // DECODED pixel bytes, so the DuckDB oracle (pure arithmetic over the
-    // same pattern) only matches if DEFLATE + all five unfilter branches
-    // reproduce every byte. Encode/decode are per-record inside partitions —
-    // the same batched shape mm1 uses, no driver hop.
+    // pixels render per media id, PNG-encode, then decode through the
+    // JDK's codecs (sources.Images); the aggregate sums DECODED pixel
+    // bytes, so the DuckDB oracle (pure arithmetic over the same pattern)
+    // only matches if the lossless round trip reproduces every byte.
+    // Encode/decode are per-record inside partitions — the same batched
+    // shape mm1 uses, no driver hop.
     "mm3_png_roundtrip" -> QueryDef(
       (s, dir) => {
         import s.implicits._
@@ -91,8 +91,8 @@ object MediaQueries extends QueryCatalog {
           it.map { id =>
             val w = 8 + (id % 16).toInt; val h = 8 + (id % 12).toInt
             val px = Array.tabulate(w * h * 3)(i => ((id * 31 + i) % 256).toByte)
-            val img = graft.sources.Png.decode(
-              graft.sources.Png.encode(graft.sources.Png.Image(w, h, 3, px)))
+            val img = graft.sources.Images.decode(
+              graft.sources.Images.encodePng(graft.sources.Images.Image(w, h, 3, px)))
             var sum = 0L
             img.pixels.foreach(p => sum += (p & 0xff))
             (id, img.width, img.height, sum)

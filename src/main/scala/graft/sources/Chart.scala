@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
   * Split as in StatPanel/MapPanel: chart DATA is engine work (oracle-
   * checked aggregate rows, landed via writeReportJson), the chart DOCUMENT
   * is driver work — here a deterministic pure-JVM rasterizer feeding the
-  * repo's own `sources.Png` encoder, so the artifact is a REAL compressed
-  * PNG with no imaging library. Every bar's pixel geometry is integer
-  * arithmetic over the aggregate values, which is what lets ChartSpec
-  * decode the emitted file and assert bar-pixel sums against the
-  * oracle-checked numbers exactly.
+  * JDK's PNG writer through `sources.Images`, so the artifact is a REAL
+  * compressed PNG with no extra imaging library. Every bar's pixel
+  * geometry is integer arithmetic over the aggregate values, which is
+  * what lets ChartSpec decode the emitted file and assert bar-pixel sums
+  * against the oracle-checked numbers exactly.
   */
 object Chart {
 
@@ -47,7 +47,7 @@ object Chart {
 
   /** Deterministic bar-chart raster: white ground, 1-px axes, solid
     * [[BarColor]] bars. RGB, row-major. */
-  def barChart(values: Seq[Double], width: Int = 800, height: Int = 600): Png.Image = {
+  def barChart(values: Seq[Double], width: Int = 800, height: Int = 600): Images.Image = {
     require(values.nonEmpty, "bar chart needs at least one value")
     require(values.forall(_ >= 0.0), "bar values must be non-negative")
     val (top, bottom) = (30, 40)
@@ -74,7 +74,7 @@ object Chart {
     val xAxisY = top + plotH
     (left - 1 until width - 20).foreach(x => set(x, xAxisY, AxisColor))
     (top until xAxisY + 1).foreach(y => set(left - 1, y, AxisColor))
-    Png.Image(width, height, 3, px)
+    Images.Image(width, height, 3, px)
   }
 
   // ------------------------------------------------------- lab-1 heatmap
@@ -125,7 +125,7 @@ object Chart {
     * scale-1 dot-matrix digits — black on the ramp's light half, white on
     * the dark half (annot text never collides with either since no ramp
     * color is pure black/white). */
-  def heatmapChart(matrix: Seq[Seq[Long]], width: Int = 1010, height: Int = 400): Png.Image = {
+  def heatmapChart(matrix: Seq[Seq[Long]], width: Int = 1010, height: Int = 400): Images.Image = {
     require(matrix.size == 7 && matrix.forall(_.size == 24),
       s"heatmap needs a dense 7x24 matrix, got ${matrix.size}x${matrix.headOption.map(_.size).getOrElse(0)}")
     val flat = matrix.flatten
@@ -170,7 +170,7 @@ object Chart {
           if (g(r)(cix) == '#') set(gx + cix, ty + r, ink)
       }
     }
-    Png.Image(width, height, 3, px)
+    Images.Image(width, height, 3, px)
   }
 
   /** Lab-1 7×24 heatmap figure (VERDICT r13 item 6): the SAME oracle-
@@ -244,7 +244,7 @@ object Chart {
     * reference's axes), quantized into [[Blues]].length evenly spaced
     * level bands. Every pixel is reproducible arithmetic over the
     * oracle-checked densities, which is what the spec asserts. */
-  def kdeContourChart(grid: Array[Array[Double]], width: Int = 530, height: Int = 420): Png.Image = {
+  def kdeContourChart(grid: Array[Array[Double]], width: Int = 530, height: Int = 420): Images.Image = {
     require(grid.length == 8 && grid.forall(_.length == 10),
       s"m9 grid is 8 rows (gy) x 10 cols (gx), got ${grid.length}x${grid.headOption.map(_.length).getOrElse(0)}")
     val flat = grid.flatten
@@ -275,7 +275,7 @@ object Chart {
       val o = (yy * width + left - 1) * 3
       px(o) = ax._1.toByte; px(o + 1) = ax._2.toByte; px(o + 2) = ax._3.toByte
     }
-    Png.Image(width, height, 3, px)
+    Images.Image(width, height, 3, px)
   }
 
   /** Lab-4 KDE contour figure (VERDICT r13 item 7): the SAME oracle-checked
@@ -295,10 +295,10 @@ object Chart {
     writePng(kdeContourChart(grid), s"$outPath/kde_contour.png")
   }
 
-  private def writePng(img: Png.Image, path: String): Unit = {
+  private def writePng(img: Images.Image, path: String): Unit = {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(path).getParent)
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), Png.encode(img)): Unit
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), Images.encodePng(img)): Unit
   }
 
   /** Lab-1 hourly-distribution chart (visualize_noise.py:61-): the SAME

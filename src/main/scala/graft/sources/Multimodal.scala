@@ -9,11 +9,12 @@ import org.apache.spark.sql.functions._
   * `mapInPandas` batch UDFs (same batch shape: an iterator of records per
   * partition, so a real codec can amortize per-batch init).
   *
-  * The actual byte decoding is behind [[MediaCodec]]. Real decoders ship
-  * for PNG (DEFLATE + unfiltering, [[Png]]), PCM WAV, BMP, and P6 PPM;
+  * The actual byte decoding is behind [[MediaCodec]]. [[RealCodec]] decodes
+  * PNG and JPEG through the JDK's `javax.imageio` ([[Images]]) and PCM WAV,
+  * BMP and P6 PPM with its own container parsers;
   * [[DeterministicFakeCodec]] remains for oracle-exact pipeline tests whose
-  * metadata must be pure arithmetic. JPEG/MP3/H.264 need codec libraries
-  * this container does not ship and fail loudly by name.
+  * metadata must be pure arithmetic. MP3 needs an audio codec the JDK does
+  * not ship and fails loudly by name.
   */
 object Multimodal {
 
@@ -28,8 +29,7 @@ object Multimodal {
     def decodeBatch(batch: Iterator[MediaRecord]): Iterator[DecodedMedia]
   }
 
-  /** Deterministic stand-in for a real decoder (STUB — a production build
-    * would bind an image/audio library here; see `RealCodec` below).
+  /** Deterministic stand-in for a real decoder (see `RealCodec` below).
     * Metadata is pure arithmetic over (id, kind, byte length) so a SQL
     * oracle reproduces it exactly. */
   object DeterministicFakeCodec extends MediaCodec {
@@ -102,22 +102,18 @@ object Multimodal {
       }
   }
 
-  /** REAL compressed-image decoding: PNG (DEFLATE from `java.util.zip` +
-    * scanline unfiltering, see [[Png]]) and baseline JPEG (Huffman + IDCT,
-    * see [[Jpeg]]) decode fully — dimensions from a verified pixel decode,
-    * not header sniffing. Uncompressed containers fall through to
-    * [[UncompressedCodec]]. MP3/H.264 genuinely need codec libraries this
-    * container does not ship and fail loudly by name — a boundary, not a
-    * silent skip. */
+  /** REAL compressed-image decoding: PNG and JPEG decode fully through
+    * [[Images]] (the JDK's `javax.imageio` readers) — dimensions from a
+    * verified pixel decode, not header sniffing. Uncompressed containers
+    * fall through to [[UncompressedCodec]]. MP3 needs an audio codec the
+    * JDK does not ship and fails loudly by name — a boundary, not a silent
+    * skip. */
   object RealCodec extends MediaCodec {
     def decodeBatch(batch: Iterator[MediaRecord]): Iterator[DecodedMedia] =
       batch.map { r =>
         val b = r.content
-        if (Png.isPng(b)) {
-          val img = Png.decode(b)
-          DecodedMedia(r.media_id, r.kind, b.length, 1, img.width, img.height)
-        } else if (Jpeg.isJpeg(b)) {
-          val img = Jpeg.decode(b)
+        if (Images.isPng(b) || Images.isJpeg(b)) {
+          val img = Images.decode(b)
           DecodedMedia(r.media_id, r.kind, b.length, 1, img.width, img.height)
         } else if (b.length >= 3 && b.startsWith("ID3".getBytes))
           throw new UnsupportedOperationException(

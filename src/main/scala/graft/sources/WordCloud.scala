@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Split as in Chart: the cloud DATA is the oracle-checked term-frequency
   * frame (the t5_word_freq query), landed as a JSON report; the cloud
-  * DOCUMENT is a driver-side deterministic rasterizer through the repo's
-  * own `sources.Png` encoder. Glyphs are a from-scratch 5×7 dot-matrix
+  * DOCUMENT is a driver-side deterministic rasterizer through the JDK's
+  * PNG writer (`sources.Images`). Glyphs are a from-scratch 5×7 dot-matrix
   * face (the classic LED-matrix letterforms, public domain shapes), so a
   * term's painted-pixel count is exact integer arithmetic:
   * scale² · Σ glyph dots — which is what lets WordCloudSpec decode the
@@ -177,7 +177,7 @@ object WordCloud {
 
   /** Rasterize a layout: white ground, each term's dots in its unique
     * color, dot = scale×scale block (exact pixel arithmetic). */
-  def raster(placed: Seq[Placed], width: Int, height: Int): Png.Image = {
+  def raster(placed: Seq[Placed], width: Int, height: Int): Images.Image = {
     val px = Array.fill[Byte](width * height * 3)(0xff.toByte)
     def set(x: Int, y: Int, c: (Int, Int, Int)): Unit =
       if (x >= 0 && x < width && y >= 0 && y < height) {
@@ -194,11 +194,11 @@ object WordCloud {
         cx += (GlyphW + Gap) * p.scale
       }
     }
-    Png.Image(width, height, 3, px)
+    Images.Image(width, height, 3, px)
   }
 
   /** Full sink: the t5_word_freq frame lands as a JSON report, the driver
-    * re-reads it and rasterizes the cloud through sources.Png — reference
+    * re-reads it and rasterizes the cloud through sources.Images — reference
     * geometry 800×400, white background, Greens (or Reds) colormap. */
   def writeWordCloudPng(s: SparkSession, dir: String, outPath: String,
       ramp: Array[String] = Greens, width: Int = 800, height: Int = 400,
@@ -212,6 +212,6 @@ object WordCloud {
     val img = raster(placed, width, height)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outPath))
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outPath/wordcloud.png"), Png.encode(img)): Unit
+      java.nio.file.Paths.get(s"$outPath/wordcloud.png"), Images.encodePng(img)): Unit
   }
 }

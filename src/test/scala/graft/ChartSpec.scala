@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Chart, Png, StatPanel}
+import graft.sources.{Chart, Images, StatPanel}
 
 /** S13 PNG-chart parity (VERDICT r11 item 5): the emitted files are REAL
   * PNGs (decoded by the repo's own codec) whose bar-pixel geometry is
@@ -8,7 +8,7 @@ import graft.sources.{Chart, Png, StatPanel}
   * over verified numbers, never a second computation. */
 class ChartSpec extends SparkSpec {
 
-  private def barPixels(img: Png.Image, x0: Int, barW: Int): Int = {
+  private def barPixels(img: Images.Image, x0: Int, barW: Int): Int = {
     var n = 0
     var y = 0
     while (y < img.height) {
@@ -35,7 +35,7 @@ class ChartSpec extends SparkSpec {
       assert(barPixels(img, x0, barW) === expected, s"bar v=$v")
     }
     // encode -> decode round-trip through the real codec preserves pixels
-    val back = Png.decode(Png.encode(img))
+    val back = Images.decode(Images.encodePng(img))
     assert(back.pixels.sameElements(img.pixels))
   }
 
@@ -43,7 +43,7 @@ class ChartSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val out = java.nio.file.Files.createTempDirectory("graft-chart").toString
     Chart.writeLab1HourlyPng(spark, dir, out)
-    val img = Png.decode(java.nio.file.Files.readAllBytes(
+    val img = Images.decode(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/hourly.png")))
 
     // reference numbers from the same engine frame StatPanelSpec pins to
@@ -64,7 +64,7 @@ class ChartSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val out = java.nio.file.Files.createTempDirectory("graft-chart-imp").toString
     Chart.writeLab2ImportancePng(spark, dir, out)
-    val img = Png.decode(java.nio.file.Files.readAllBytes(
+    val img = Images.decode(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/feature_importance.png")))
 
     val rows = spark.read.schema("feature STRING, importance DOUBLE")
@@ -86,7 +86,7 @@ class ChartSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val out = java.nio.file.Files.createTempDirectory("graft-chart-kde").toString
     Chart.writeLab4KdeContourPng(spark, dir, out)
-    val img = Png.decode(java.nio.file.Files.readAllBytes(
+    val img = Images.decode(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/kde_contour.png")))
 
     // reference densities straight from the oracle-checked m9 query body
@@ -147,7 +147,7 @@ class ChartSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val out = java.nio.file.Files.createTempDirectory("graft-chart-heat").toString
     Chart.writeLab1HeatmapPng(spark, dir, out)
-    val img = Png.decode(java.nio.file.Files.readAllBytes(
+    val img = Images.decode(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/heatmap.png")))
 
     // reference matrix straight from the oracle-checked a2 query body

@@ -1,83 +1,72 @@
 package graft
 
-import graft.sources.{Jpeg, Png}
+import graft.sources.{Fixtures, Images, Multimodal}
+import graft.sources.Multimodal.MediaRecord
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Baseline JPEG codec proven end to end without binary fixtures: render
-  * deterministic pixels → encode → decode → compare within the quantization
-  * error bound (the mm3/PNG pattern, adapted to a lossy codec). */
+/** Baseline JPEG decode against committed fixtures written by an
+  * independent encoder (see FIXTURES.md "C. Image codec fixtures"): each
+  * fixture decodes through RealCodec's partition-batch path and through
+  * `Images.decode`, and the pixels are compared with the re-rendered source
+  * pattern within the quantization error bound. */
 class JpegSpec extends AnyFunSuite {
+
+  private def fixture(name: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(Fixtures.path(s"fixtures/$name")))
 
   private def mae(a: Array[Byte], b: Array[Byte]): Double = {
     require(a.length == b.length)
     a.indices.map(i => math.abs((a(i) & 0xff) - (b(i) & 0xff))).sum.toDouble / a.length
   }
 
-  private def rgbImage(w: Int, h: Int)(f: (Int, Int) => (Int, Int, Int)): Png.Image = {
+  /** The 0xFF-heavy noise pattern `sample.jpg` was encoded from (37x29, q95). */
+  private val noise: Images.Image = {
+    val (w, h) = (37, 29)
     val px = new Array[Byte](w * h * 3)
     for (y <- 0 until h; x <- 0 until w) {
-      val (r, g, b) = f(x, y)
-      px((y * w + x) * 3) = r.toByte; px((y * w + x) * 3 + 1) = g.toByte
-      px((y * w + x) * 3 + 2) = b.toByte
+      px((y * w + x) * 3) = ((x * 97 + y * 31) % 256).toByte
+      px((y * w + x) * 3 + 1) = ((x * 53) % 256).toByte
+      px((y * w + x) * 3 + 2) = ((y * 71) % 256).toByte
     }
-    Png.Image(w, h, 3, px)
+    Images.Image(w, h, 3, px)
   }
 
-  test("uniform color round-trips within rounding error") {
-    val img = rgbImage(32, 32)((_, _) => (120, 64, 200))
-    val got = Jpeg.decode(Jpeg.encode(img, quality = 90))
-    assert(got.width === 32 && got.height === 32 && got.channels === 3)
-    assert(mae(img.pixels, got.pixels) <= 1.5)
-  }
-
-  test("smooth gradient at q=90 stays within a tight error bound") {
-    val img = rgbImage(64, 48)((x, y) => (x * 4 % 256, y * 5 % 256, (x + y) * 2 % 256))
-    val got = Jpeg.decode(Jpeg.encode(img, quality = 90))
-    assert(got.width === 64 && got.height === 48)
-    assert(mae(img.pixels, got.pixels) <= 6.0)
-  }
-
-  test("structured pattern at q=50 is lossy but bounded, q=90 strictly better") {
-    val img = rgbImage(40, 40) { (x, y) =>
-      val block = ((x / 8) + (y / 8)) % 2
-      if (block == 0) (220, 30, 30) else (20, 20, 180)
-    }
-    val e50 = mae(img.pixels, Jpeg.decode(Jpeg.encode(img, quality = 50)).pixels)
-    val e90 = mae(img.pixels, Jpeg.decode(Jpeg.encode(img, quality = 90)).pixels)
-    assert(e50 <= 12.0)
-    assert(e90 < e50)
+  /** Decode through RealCodec (dimensions) and Images (samples); both agree. */
+  private def decodeBoth(name: String): Images.Image = {
+    val bytes = fixture(name)
+    val meta = Multimodal.RealCodec.decodeBatch(Iterator(MediaRecord(1L, "image", bytes))).next()
+    val img = Images.decode(bytes)
+    assert(meta.width === img.width && meta.height === img.height && meta.n_bytes === bytes.length)
+    assert(img.pixels.length === img.width * img.height * img.channels)
+    img
   }
 
   test("grayscale single-channel image round-trips") {
-    val px = Array.tabulate(24 * 24)(i => ((i * 7) % 256).toByte)
-    val img = Png.Image(24, 24, 1, px)
-    val got = Jpeg.decode(Jpeg.encode(img, quality = 85))
+    val got = decodeBoth("sample_gray.jpg") // 24x24, q85
     assert(got.channels === 1 && got.width === 24 && got.height === 24)
-    assert(mae(px, got.pixels) <= 8.0)
+    assert(mae(Array.tabulate(24 * 24)(i => ((i * 7) % 256).toByte), got.pixels) <= 8.0)
   }
 
   test("odd (non-multiple-of-8) dimensions pad and crop correctly") {
-    val img = rgbImage(13, 21)((x, y) => (x * 19 % 256, y * 11 % 256, 77))
-    val got = Jpeg.decode(Jpeg.encode(img, quality = 90))
-    assert(got.width === 13 && got.height === 21)
-    assert(mae(img.pixels, got.pixels) <= 8.0)
+    val got = decodeBoth("sample.jpg")
+    assert(got.width === 37 && got.height === 29 && got.channels === 3)
+    assert(mae(noise.pixels, got.pixels) <= 14.0)
   }
 
   test("magic sniffing and malformed input fail loudly") {
-    val img = rgbImage(16, 16)((_, _) => (1, 2, 3))
-    val bytes = Jpeg.encode(img)
-    assert(Jpeg.isJpeg(bytes))
-    assert(!Jpeg.isJpeg("not a jpeg".getBytes))
-    intercept[IllegalArgumentException] { Jpeg.decode("junkjunkjunk".getBytes) }
-    intercept[IllegalArgumentException] { Jpeg.decode(bytes.take(40)) } // truncated pre-SOS
+    val bytes = fixture("sample.jpg")
+    assert(Images.isJpeg(bytes) && !Images.isPng(bytes))
+    assert(!Images.isJpeg("not a jpeg".getBytes))
+    intercept[IllegalArgumentException] { Images.decode("junkjunkjunk".getBytes) }
+    intercept[IllegalArgumentException] { Images.decode(bytes.take(40)) } // truncated pre-SOS
   }
 
   test("entropy-coded 0xFF bytes are stuffed and unstuffed transparently") {
-    // High-frequency noise maximizes the chance of 0xFF bytes in the stream;
-    // decode must still round-trip (the stuffing path, spec F.1.2.3).
-    val img = rgbImage(32, 32)((x, y) => ((x * 97 + y * 31) % 256, (x * 53) % 256, (y * 71) % 256))
-    val got = Jpeg.decode(Jpeg.encode(img, quality = 95))
-    assert(got.width === 32 && got.height === 32)
-    assert(mae(img.pixels, got.pixels) <= 14.0)
+    // The fixture's scan carries stuffed 0xFF 0x00 pairs (spec F.1.2.3);
+    // decode must still reproduce the pattern within the q95 bound.
+    val bytes = fixture("sample.jpg")
+    val sos = bytes.indices.find(i => (bytes(i) & 0xff) == 0xff && (bytes(i + 1) & 0xff) == 0xda).get
+    assert((sos until bytes.length - 1).exists(i => bytes(i) == -1 && bytes(i + 1) == 0))
+    assert(mae(noise.pixels, decodeBoth("sample.jpg").pixels) <= 14.0)
   }
 }

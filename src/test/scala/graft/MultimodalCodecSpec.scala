@@ -71,36 +71,36 @@ class MultimodalCodecSpec extends SparkSpec {
   }
 
   test("PNG fixture decodes bit-exactly against the committed raw pixels") {
-    import graft.sources.{Fixtures, Png}
+    import graft.sources.{Fixtures, Images}
     val png = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(Fixtures.path("fixtures/sample.png")))
     val raw = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(Fixtures.path("fixtures/sample.rgb")))
-    val img = Png.decode(png)
+    val img = Images.decode(png)
     // fixture rows cycle all 5 filters and the IDAT stream is split in two
     assert(img.width === 41 && img.height === 23 && img.channels === 3)
     assert(java.util.Arrays.equals(img.pixels, raw))
   }
 
-  test("PNG encode -> decode round-trips every color type and filter") {
-    import graft.sources.Png
-    for (ch <- Seq(1, 2, 3, 4); filt <- Seq(0, 1, 2, 3, 4)) {
+  test("PNG encode -> decode round-trips every color type") {
+    import graft.sources.Images
+    for (ch <- Seq(1, 2, 3, 4)) {
       val w = 13; val h = 9
-      val px = Array.tabulate(w * h * ch)(i => ((i * 11 + ch * 3 + filt) % 256).toByte)
-      val back = Png.decode(Png.encode(Png.Image(w, h, ch, px), _ => filt))
+      val px = Array.tabulate(w * h * ch)(i => ((i * 11 + ch * 3) % 256).toByte)
+      val back = Images.decode(Images.encodePng(Images.Image(w, h, ch, px)))
       assert(back.width === w && back.height === h && back.channels === ch)
-      assert(java.util.Arrays.equals(back.pixels, px), s"ch=$ch filter=$filt")
+      assert(java.util.Arrays.equals(back.pixels, px), s"ch=$ch")
     }
   }
 
   test("RealCodec decodes PNG and baseline JPEG, falls through to WAV") {
-    import graft.sources.{Jpeg, Png}
+    import graft.sources.{Fixtures, Images}
     val spark0 = spark
     import spark0.implicits._
-    val png = Png.encode(Png.Image(17, 5, 3,
+    val png = Images.encodePng(Images.Image(17, 5, 3,
       Array.tabulate(17 * 5 * 3)(i => (i % 256).toByte)))
-    val jpg = Jpeg.encode(Png.Image(21, 9, 3,
-      Array.tabulate(21 * 9 * 3)(i => ((i * 5) % 256).toByte)), quality = 85)
+    val jpg = java.nio.file.Files.readAllBytes( // 37x29 baseline JFIF
+      java.nio.file.Paths.get(Fixtures.path("fixtures/sample.jpg")))
     val media = Seq(
       MediaRecord(11L, "image", png),
       MediaRecord(12L, "audio", wav(rate = 8000, channels = 1, bits = 16, frames = 100)),
@@ -110,7 +110,7 @@ class MultimodalCodecSpec extends SparkSpec {
       .collect().map(d => d.media_id -> d).toMap
     assert(out(11L).width === 17 && out(11L).height === 5)
     assert(out(12L).width === 8000 && out(12L).n_frames === 100)
-    assert(out(13L).width === 21 && out(13L).height === 9)
+    assert(out(13L).width === 37 && out(13L).height === 29)
     // Truncated JPEG still fails loudly, never a silent skip.
     val broken = Seq(MediaRecord(14L, "image",
       Array(0xff.toByte, 0xd8.toByte, 0xff.toByte, 0xe0.toByte))).toDS()
@@ -123,10 +123,10 @@ class MultimodalCodecSpec extends SparkSpec {
   }
 
   test("truncated PNG fails loudly, not silently") {
-    import graft.sources.Png
-    val png = Png.encode(Png.Image(8, 8, 3, Array.fill(8 * 8 * 3)(5.toByte)))
+    import graft.sources.Images
+    val png = Images.encodePng(Images.Image(8, 8, 3, Array.fill(8 * 8 * 3)(5.toByte)))
     intercept[IllegalArgumentException] {
-      Png.decode(java.util.Arrays.copyOf(png, png.length - 20))
+      Images.decode(java.util.Arrays.copyOf(png, png.length - 20))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Png, Reports, StatPanel}
+import graft.sources.{Images, Reports, StatPanel}
 
 /** S13 end-to-end: one call emits the reference's complete lab-1 artifact
   * set (panel + interactive map + chart PNG) and the downloadable zip, all
@@ -25,7 +25,7 @@ class ReportBundleSpec extends SparkSpec {
     val noise = labeled.filter("label = -1").count()
     assert(panel.contains(s"""<div class="v" id="total_points">$total</div>"""))
     assert(map.contains(s""""n":$noise,"pts":"""))
-    assert(Png.isPng(png) && Png.decode(png).width === 800)
+    assert(Images.isPng(png) && Images.decode(png).width === 800)
 
     // the zip carries every artifact byte-for-byte
     val zf = new java.util.zip.ZipFile(s"$out.zip")
@@ -77,7 +77,7 @@ class ReportBundleSpec extends SparkSpec {
     assert(n4.exists(n => n.startsWith("wordcloud/term_rows/") && n.endsWith(".json")))
     // the zipped wordcloud really is the repo's PNG
     val zf = new java.util.zip.ZipFile(s"$base/lab4.zip")
-    try assert(Png.isPng(
+    try assert(Images.isPng(
       zf.getInputStream(zf.getEntry("wordcloud/wordcloud.png")).readAllBytes))
     finally zf.close()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Png, WordCloud}
+import graft.sources.{Images, WordCloud}
 
 /** S13 word-cloud parity (VERDICT r12 item 5): decode the emitted PNG and
   * assert per-term pixel coverage EXACTLY against the oracle-checked
@@ -23,7 +23,7 @@ class WordCloudSpec extends SparkSpec {
   test("emitted PNG covers each t5 term with exactly scale²·dots pixels of its unique color") {
     val out = java.nio.file.Files.createTempDirectory("graft-wc").toString
     WordCloud.writeWordCloudPng(spark, dir, out)
-    val img = Png.decode(java.nio.file.Files.readAllBytes(
+    val img = Images.decode(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/wordcloud.png")))
     assert(img.width === 800 && img.height === 400)
 
